@@ -1,21 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SQL kernels + the dot(x,x)->self-dot optimizer rule
-    graft.plans.GraftExtensions.register(spark)
+    val spark = GraftSession.create()
     // JIT/codegen warm-up so the first measured query isn't charged for it
     spark.range(1000000L).selectExpr("sum(id)").collect()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }

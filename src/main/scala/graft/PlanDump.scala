@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named declared queries to files —
   * the per-round plan evidence under plans/r<N>/ (guide §1: capture the
@@ -7,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * WholeStageCodegen spans — before and after each change).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [name,name,...]
-  * Session config mirrors Bench exactly so the dumped plan is the plan
-  * the bench executes (AQE initial plan; the noop write node is not
+  * The session is Bench's own ([[GraftSession]]), so the dumped plan is
+  * the plan the bench executes (AQE initial plan; the noop write node is not
   * part of `df.queryExecution`, matching what a reader compares).
   */
 object PlanDump {
@@ -27,18 +26,7 @@ object PlanDump {
     // executes")
     if (sys.env.get("SPARK_GRAFT_LINEAGE").contains("1"))
       sys.props("graft.explain.lineage") = "true"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = GraftSession.create()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

@@ -200,19 +200,6 @@ object AsOf {
       |       nk AS o_orderkey, np AS o_totalprice
       |FROM c WHERE side = 1 ORDER BY event_id""".stripMargin
 
-  /** Events as-of joined to the customer's latest prior order: the
-    * classic "state of the account at event time" enrichment. */
-  def qEventsAsofOrders(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val ord = Tables.orders(spark, dir)
-      .select(col("o_custkey").as("user_id"), col("o_orderdate"),
-        col("o_orderkey"), col("o_totalprice"))
-    asofJoin(ev, ord, key = "user_id", leftTs = "ts", rightTs = "o_orderdate",
-        rightValueCols = Seq("o_orderkey", "o_totalprice"))
-      .orderBy(col("event_id"))
-  }
-
   /** DuckDB has a native ASOF JOIN — the oracle for the composition.
     * Tie-break caveat: with several orders at the same (user, date), the
     * window picks the last by input order nondeterministically; the probe

@@ -47,15 +47,6 @@ object Batching {
           .as("tokens"))
       .withColumn("bucket",
         TextFns.log2Floor(greatest(col("tokens"), lit(1L))).cast("long"))
-    batchesOn(base, hotGroupsOverride)
-  }
-
-  /** The rank-and-roll-up core over a prepared (doc_id, tokens, bucket)
-    * frame — split from the tokenize step so `Probe lengthbatch` can
-    * feed synthetic token distributions (the degenerate one-hot-bucket
-    * web-corpus shape) at tier scale. */
-  private[graft] def batchesOn(base: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame =
     // the token projection feeds up to three passes once the dial's
     // hot path engages (sample/exact pre-check + groupedRunningSum's
     // two scans) — cache it for the duration; the checkpointed result
@@ -82,6 +73,7 @@ object Batching {
           col("max_tokens"), col("sum_tokens"), col("capacity"),
           col("pad_waste_permille"))
     }
+  }
 
   def qLengthBatches(spark: SparkSession, dir: String): DataFrame =
     lengthBatches(Tables.documents(spark, dir))

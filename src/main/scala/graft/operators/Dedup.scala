@@ -66,13 +66,8 @@ object Dedup {
     * the pair result instead. */
   private[operators] def withCached(frame: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
     val cached = frame.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // -Dgraft.explain.lineage=true keeps the logical plan visible (for
-    // plan dumps/inspection) instead of truncating it at the checkpoint
-    try {
-      val out = body(cached)
-      if (sys.props.get("graft.explain.lineage").contains("true")) out
-      else out.localCheckpoint(true)
-    } finally cached.unpersist(false)
+    try materialized(body(cached))
+    finally cached.unpersist(false)
   }
 
   /** [[withCached]] over SEVERAL intermediate frames with ONE final
@@ -82,16 +77,16 @@ object Dedup {
     * once per level, and the extra passes are pure overhead. */
   private[operators] def withCachedAll(frames: DataFrame*)(body: => DataFrame): DataFrame = {
     frames.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      val out = body
-      if (sys.props.get("graft.explain.lineage").contains("true")) out
-      else out.localCheckpoint(true)
-    } finally frames.foreach(_.unpersist(false))
+    try materialized(body)
+    finally frames.foreach(_.unpersist(false))
   }
 
   /** Eagerly materialize ONE bounded intermediate consumed by several
-    * downstream legs (same lineage-prop escape hatch and localCheckpoint
-    * reliability caveats as [[withCached]]). Since r17 the
+    * downstream legs (same localCheckpoint reliability caveats as
+    * [[withCached]]). The one lineage escape hatch: with
+    * -Dgraft.explain.lineage=true the frame is returned unsettled, so
+    * plan dumps show the full logical subtree instead of a checkpoint
+    * scan — every settling helper ends here. Since r17 the
     * [[Scale.globalRank]] family returns LAZY frames (deterministic
     * baked buckets need no pinning), so a caller fanning a rank result
     * into 2+ legs decides the materialization itself — here — instead
@@ -126,6 +121,10 @@ object Dedup {
       .select(posexplode(col("ds")).as(Seq("i", "a")), col("ds"))
       .select(col("a"),
         explode(slice(col("ds"), col("i") + lit(2), size(col("ds")))).as("b"))
+      // a unit repeating the same payload under one key would pair with
+      // itself; the self-join this replaces required a strictly smaller
+      // first field, so (x, x) never came out
+      .filter(col("a") =!= col("b"))
 
   /** Exact n-gram Jaccard near-dup pairs via shared-shingle candidate
     * generation: |A∩B| counted by the co-occurrence count,
@@ -249,13 +248,6 @@ object Dedup {
   val MinhashFuncs = 64
   val Bands = 16
   val RowsPerBand: Int = MinhashFuncs / Bands
-
-  /** MinHash signatures: h_i(doc) = min over shingles of murmur3(shingle, i). */
-  def minhashSignatures(docs: DataFrame): DataFrame = {
-    val ex = shingled(docs).select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
-    val aggs = (0 until MinhashFuncs).map(i => min(hash(col("sh"), lit(i))).as(s"h$i"))
-    ex.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
 
   /** LSH candidate pairs: docs sharing any band hash; then exact-Jaccard
     * verified so the output equals the exact operator (recall at the 0.8
@@ -619,47 +611,6 @@ object Dedup {
         stepped("l1") === col("j_id"), "left")
       .select(col("doc_id"), col("label"),
         least(col("l1"), coalesce(col("j_l"), col("l1"))).as("next"))
-  }
-
-  /** Candidate-pair counts per blocking scheme — probe-only
-    * instrumentation (graft.Probe corpus) behind SCALE.md's "colliding
-    * pairs, not n²" scaling table. Runs ONLY candidate generation, no
-    * verification, sharing one cached shingling per call. */
-  private[graft] def candidateCounts(docs: DataFrame,
-      maxShingleDocFreq: Int = 1000, includeShingle: Boolean = true): Map[String, Long] = {
-    val sh = shingled(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ex = sh.select(col("doc_id"), explode_outer(col("shingles")).as("sh"))
-      // the raw shingle-join candidate count is skippable: its distinct
-      // shuffle is the one probe leg whose volume (≈2k pairs/doc on the
-      // dup-dense fixture) exceeds single-host disk near 10^6 docs —
-      // measured, which is WHY the LSH schemes exist (SCALE.md)
-      val shinglePairs = if (!includeShingle) -1L else {
-        val frequent = ex.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxShingleDocFreq).select(col("sh"))
-        val rare = ex.join(broadcast(frequent), Seq("sh"), "left_anti")
-        val a = rare.select(col("doc_id").as("doc_a"), col("sh"))
-        val b = rare.select(col("doc_id").as("doc_b"), col("sh"))
-        a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
-          .select(col("doc_a"), col("doc_b")).distinct().count()
-      }
-      val aggs = (0 until MinhashFuncs).map(i => min(hash(col("sh"), lit(i))).as(s"h$i"))
-      val sigs = ex.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-      val bandCols = (0 until Bands).map { bnd =>
-        val rows = (0 until RowsPerBand).map(r => col(s"h${bnd * RowsPerBand + r}"))
-        struct(lit(bnd).as("band"), hash(rows: _*).as("bh"))
-      }
-      val banded = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-      val bandPairs = banded.as("x").join(banded.as("y"), Seq("band", "bh"))
-        .filter(col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct().count()
-      val blockPairs = simhashCandidates16(simhash(docs))
-        .select(col("doc_a"), col("doc_b")).count()
-      Map("shingle" -> shinglePairs, "minhash_band" -> bandPairs,
-        "simhash_block" -> blockPairs)
-    } finally { sh.unpersist(); () }
   }
 
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame =

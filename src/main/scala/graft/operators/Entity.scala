@@ -362,7 +362,7 @@ object Entity {
     * (id, name, blk) over-length rows for the brute-force leg.
     * Append maintenance ([[appendEdit2Index]]) writes ONLY the new
     * batch's keys — work ∝ batch, the [[Pq.appendCodes]] discipline
-    * (probe: `Probe entityappend`). */
+    * (measured: SCALE.md r13). */
   def writeEdit2Index(df: DataFrame, idCol: String, nameCol: String,
       blockCol: Option[String], path: String, append: Boolean = false): Unit = {
     val mode = if (append) "append" else "overwrite"

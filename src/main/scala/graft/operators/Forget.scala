@@ -40,23 +40,27 @@ object Forget {
     * of many small rewrite jobs run serially leaves the cluster idle in
     * every job's tail. Tasks must touch DISJOINT paths (every caller
     * here does: distinct artifact trees, distinct files). Results come
-    * back in input order; the first failure is rethrown. Pool is
-    * bounded: each task is a small job + FS renames, so a handful of
-    * in-flight jobs saturates the scheduler without fighting for
-    * executor slots. */
+    * back in input order. Every unit settles before the first failure
+    * (in input order) is rethrown as itself: a caller's cleanup — e.g.
+    * deleting the tree the sweeps write into — must never race a
+    * sibling that is still writing. Pool is bounded: each task is a
+    * small job + FS renames, so a handful of in-flight jobs saturates
+    * the scheduler without fighting for executor slots. */
   private val SweepThreads = 8
 
-  private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
+  private[graft] def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.lengthCompare(1) <= 0) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(items.size, SweepThreads))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try {
-        val fs = items.map(i => scala.concurrent.Future(f(i)))
-        fs.map(fut => scala.concurrent.Await.result(fut,
-          scala.concurrent.duration.Duration.Inf))
+        val futures = items.map(i =>
+          pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(i) }))
+        val outcomes = futures.map { fut =>
+          try Right(fut.get())
+          catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) }
+        }
+        outcomes.map(_.fold(e => throw e, identity))
       } finally { pool.shutdown(); () }
     }
 
@@ -67,7 +71,7 @@ object Forget {
     * distinct from the subject table's full lineage (a source scan +
     * shuffle per rewritten file — pure overhead × #units). */
   private def settledKeys(keysDf: DataFrame, keyCol: String): DataFrame =
-    keysDf.select(col(keyCol)).distinct().localCheckpoint(true)
+    Dedup.materialized(keysDf.select(col(keyCol)).distinct())
 
   /** Convenience form for small subject lists. */
   def forgetKeys(spark: SparkSession, path: String,
@@ -350,30 +354,9 @@ object Forget {
     forgetPackedTotals(spark, path, keysDf)._1
 
   /** [[forgetPacked]] plus (rows_total_before, rows_removed_total) for
-    * the compliance report — the [[forgetKeysFilesTotals]] contract.
-    * The public erasure entry point cannot express the unconstrained
-    * (pack-straddling) writer: that path lives only on the
-    * `private[graft]` probe overload below (ADVICE r15 — a default
-    * parameter on a compliance API is one call-site typo away from the
-    * r13 corruption). */
+    * the compliance report — the [[forgetKeysFilesTotals]] contract. */
   def forgetPackedTotals(spark: SparkSession, path: String,
-      keysDf: DataFrame): (DataFrame, Long, Long) =
-    forgetPackedTotalsImpl(spark, path, keysDf,
-      probeUnsafeUnconstrainedWrite = false)
-
-  /** Probe-only overload: `graft.Probe packrewrite`'s cost attribution
-    * (whole-dir sweep with vs without the layout-preserving range
-    * partition). The unconstrained writer reintroduces the
-    * pack-straddle corruption ADVICE r13 flagged, so it is sealed
-    * inside the package — nothing outside the probe may reach it. */
-  private[graft] def forgetPackedTotalsProbe(spark: SparkSession,
-      path: String, keysDf: DataFrame,
-      unconstrainedWrite: Boolean): (DataFrame, Long, Long) =
-    forgetPackedTotalsImpl(spark, path, keysDf, unconstrainedWrite)
-
-  private def forgetPackedTotalsImpl(spark: SparkSession, path: String,
-      keysDf: DataFrame,
-      probeUnsafeUnconstrainedWrite: Boolean): (DataFrame, Long, Long) = {
+      keysDf: DataFrame): (DataFrame, Long, Long) = {
     import org.apache.spark.sql.expressions.Window
     def packClose(df: DataFrame, keys: DataFrame, keyCol: String): DataFrame = {
       val marked = df.join(keys.withColumn("_graft_hit", lit(1L)),
@@ -396,12 +379,9 @@ object Forget {
     // straddle files and the NEXT sweep's per-file closure would shift
     // only the half that holds a subject row (ADVICE r13, medium)
     def packedWriter(df: DataFrame, staging: String, nFiles: Int): Unit =
-      if (probeUnsafeUnconstrainedWrite)
-        df.write.mode("overwrite").parquet(staging)
-      else
-        df.repartitionByRange(nFiles, col("shard"), col("pack_id"))
-          .sortWithinPartitions(col("shard"), col("pack_id"), col("doc_id"))
-          .write.mode("overwrite").parquet(staging)
+      df.repartitionByRange(nFiles, col("shard"), col("pack_id"))
+        .sortWithinPartitions(col("shard"), col("pack_id"), col("doc_id"))
+        .write.mode("overwrite").parquet(staging)
     forgetKeysFilesTotals(spark, path, "doc_id", keysDf, packClose,
       packedWriter)
   }
@@ -732,30 +712,24 @@ object Forget {
         .localCheckpoint(true)
       // the three sweep groups touch disjoint trees under tmp — overlap
       // them (guide §2.6) exactly like forgetWithDerived overlaps its
-      // per-artifact sweeps internally
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val fReport = Future(forgetWithDerived(spark, Seq(
-        DerivedRef("primary_documents", primary, "doc_id", Seq("source")),
-        DerivedRef("sparse_postings", sparse, "doc_id"),
-        DerivedRef("bm25_postings", s"$bm25/postings", "doc_id"),
-        DerivedRef("bm25_doclen", s"$bm25/doclen", "doc_id"),
-        DerivedRef("phrase_index", phrase, "doc_id")), subjects))
-      // r13: the content-embedding targets go through their dedicated
-      // sweeps (pack-closure rewrite; JSON-line shard rewrite) and join
-      // the same compliance report
-      val fPack = Future(forgetPackedTotals(spark,
-        tmp.resolve("packed_assignments").toString, subjects))
-      val fJl = Future(forgetJsonlTotals(spark,
-        tmp.resolve("jsonl_export").toString, "$.doc_id", subjects))
-      val (report, (_, packTotal, packRemoved), (_, jlTotal, jlRemoved)) =
-        try (Await.result(fReport, Duration.Inf),
-          Await.result(fPack, Duration.Inf),
-          Await.result(fJl, Duration.Inf))
-        finally { pool.shutdown(); () }
+      // per-artifact sweeps internally; the forgetWithDerived report
+      // rides in the first slot of the (frame, total, removed) shape
+      // the two dedicated sweeps return
+      val Seq((report, _, _), (_, packTotal, packRemoved), (_, jlTotal, jlRemoved)) =
+        inParallel(Seq[() => (DataFrame, Long, Long)](
+          () => (forgetWithDerived(spark, Seq(
+            DerivedRef("primary_documents", primary, "doc_id", Seq("source")),
+            DerivedRef("sparse_postings", sparse, "doc_id"),
+            DerivedRef("bm25_postings", s"$bm25/postings", "doc_id"),
+            DerivedRef("bm25_doclen", s"$bm25/doclen", "doc_id"),
+            DerivedRef("phrase_index", phrase, "doc_id")), subjects), 0L, 0L),
+          // r13: the content-embedding targets go through their dedicated
+          // sweeps (pack-closure rewrite; JSON-line shard rewrite) and
+          // join the same compliance report
+          () => forgetPackedTotals(spark,
+            tmp.resolve("packed_assignments").toString, subjects),
+          () => forgetJsonlTotals(spark,
+            tmp.resolve("jsonl_export").toString, "$.doc_id", subjects)))(_())
       import spark.implicits._
       val extra = Seq(
         ("packed_assignments", packRemoved, packTotal - packRemoved),

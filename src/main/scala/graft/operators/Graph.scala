@@ -795,7 +795,7 @@ object Graph {
         bucketedDirectedNodes = stats.getLong(1)
         // bucket count is a CAPACITY parameter — a scan's parallelism IS
         // its bucket count (measured: 8 buckets lose to a plain scan
-        // past ~10M edges on 32 cores, `Probe hitsscale`), but
+        // past ~10M edges on 32 cores, SCALE.md r15), but
         // over-bucketing a small table costs pure scheduling overhead
         // (32 tiny tasks × 6 half-steps measured 1.5× on the sf0.1
         // serving gate). Size by DATA — ~1M edges per bucket — with an

@@ -171,7 +171,7 @@ object ModelAudit {
     *
     * IVF coarse centroids and PQ codebooks stay flag-only here: their
     * rebuild is a k-means over the post-erasure embedding corpus whose
-    * cost is measured in `graft.Probe modelrebuild` (SCALE.md r15) —
+    * cost is measured in SCALE.md r15 —
     * the audit names the affected cells; scheduling the rebuild is an
     * operational decision the flag feeds.
     *
@@ -259,7 +259,7 @@ object ModelAudit {
     * cell of the serving layout carries erased training mass. Families
     * with no tripped cell keep their quantizers (de-minimis residue,
     * documented by the pre-audit row). Rebuild cost is the measured
-    * near-flat `graft.Probe modelrebuild` curve (SCALE.md r15) — the
+    * near-flat curve in SCALE.md r15 — the
     * sweep stays opt-in because rescheduling a serving layout rebuild
     * is an operational decision; this entry point IS that schedule.
     *

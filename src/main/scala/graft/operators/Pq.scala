@@ -139,11 +139,6 @@ object Pq {
       element_at(element_at(lut, j + 1), element_at(codes, j + 1) + 1))
       .reduceLeft(_ + _)
 
-  /** PQ top-k: ADC sweep over the code table, top Refine·k per query,
-    * exact-cosine re-rank of those against true vectors. */
-  def pqTopK(emb: DataFrame, k: Int, nQueries: Int, dim: Int = 64): DataFrame =
-    pqTopKWith(emb, trainCodebooks(emb, dim), k, nQueries, dim)
-
   /** The per-query LUT frame: (query_id, lut). Query subvectors are
     * projected once (the same lambda-inlining discipline as encode —
     * lutFor references each K times). */
@@ -204,6 +199,8 @@ object Pq {
     rerank(shortlist, emb, k, nQueries)
   }
 
+  /** PQ top-k: ADC sweep over the code table, top Refine·k per query,
+    * exact-cosine re-rank of those against true vectors. */
   def pqTopKWith(emb: DataFrame, books: Seq[Seq[Array[Double]]], k: Int,
       nQueries: Int, dim: Int = 64): DataFrame =
     sweep(encode(emb, books, dim)

@@ -111,7 +111,7 @@ object Rfm {
     * threading the full frame through the three chained globalRanks
     * materialized the GROWING frame six times (each rank's internal
     * persist + checkpoint), which turned storage-bound at the 38M
-    * tier (`Probe ungroupedscale`, r16) — the slim form materializes
+    * tier (SCALE.md r16) — the slim form materializes
     * ~16 B/row per rank instead, and the join-back is three
     * co-keyed hash joins at entity grain. */
   private def scalableOn(b: DataFrame, n: Long, nPartitions: Int): DataFrame = {

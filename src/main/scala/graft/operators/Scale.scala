@@ -412,7 +412,7 @@ object Scale {
   /** Below this per-group row count the plain per-group window WINS on
     * measurement: one task sorting `n/|groups|` rows in memory beats the
     * grouped path's two shuffles + control-plane round trip. Measured
-    * crossover on this host (`graft.Probe hotgroup`, SCALE.md r10):
+    * crossover on this host (SCALE.md r10):
     * plain-window 3-group lineitem at 2M rows/group still ~1.8× faster;
     * the grouped path must only engage where a single sort task becomes
     * the bottleneck (spill + one core against a cluster). 8M is past
@@ -460,7 +460,7 @@ object Scale {
   /** True when `df` is a bare projection over leaf scans — the shape
     * whose count() the parquet reader answers from footer row counts
     * without decoding a single column, strictly cheaper than even the
-    * 1% sampled scan (measured: `graft.Probe dialcost`, SCALE.md r16).
+    * 1% sampled scan (measured: SCALE.md r16).
     * A Filter is excluded on purpose: a filtered count must decode the
     * predicate columns, which is sample-cost, not footer-cost. */
   private def scanOnly(df: DataFrame): Boolean = {

@@ -20,7 +20,7 @@ import graft.Tables
   * Scale shape (100 TB): `l_returnflag` is a THREE-value key, so at
   * scale per-group windows are three giant single-task sorts — the
   * named scale-killer. The [[Scale.hotGroups]] dial (measured, not
-  * asserted — `graft.Probe hotgroup`, SCALE.md r10) selects
+  * asserted — SCALE.md r10) selects
   * [[Scale.groupedRunningSum]]'s distributed prefix-sum pattern once a
   * group exceeds [[Scale.HotGroupMinRowsPerGroup]] rows — max task one
   * range partition, never ⅓ of lineitem, with group totals riding the

@@ -39,7 +39,7 @@ object MatVec {
   /** Centroid/codebook matrix wrapper: value equality (expression
     * canonicalization compares constructor args) and a compact toString
     * (a bare Array would print thousands of doubles into every explain
-    * and PLANS.md dump). */
+    * and PlanDump file). */
   final class Mat(val rows: Array[Array[Double]]) extends Serializable {
     require(rows.nonEmpty, "empty matrix")
     override def equals(o: Any): Boolean = o match {

@@ -162,4 +162,21 @@ class ForgetSpec extends SparkSpecBase {
     assert(report.head.getLong(1) == 3L, "rows_removed")
     assert(report.head.getLong(2) == 0L, "rows_kept must be 0")
   }
+
+  // callers delete the tree the sweeps write into as soon as the fan-out
+  // returns or throws (qForgetAudit's temp copy): a sibling still
+  // writing then would race that cleanup
+  test("sweep fan-out: a failing unit surfaces only after its slow sibling finished, as itself") {
+    val boom = new IllegalStateException("unit 0 failed")
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val thrown = intercept[IllegalStateException] {
+      Forget.inParallel(Seq(0, 1)) { i =>
+        if (i == 0) throw boom
+        Thread.sleep(1500)
+        siblingDone.set(true)
+      }
+    }
+    assert(siblingDone.get, "the sibling was still running when the failure surfaced")
+    assert(thrown eq boom, "the unit's own exception, not a wrapper")
+  }
 }

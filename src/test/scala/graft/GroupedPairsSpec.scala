@@ -48,4 +48,16 @@ class GroupedPairsSpec extends SparkSpecBase {
     val n = Dedup.groupedPairs(ex, "k", struct(col("id"))).count()
     assert(n == 2L, "one pair row per shared key, exactly like the join")
   }
+
+  test("a payload repeated under one key never pairs with itself") {
+    import spark.implicits._
+    // doc 1 contributes key k twice: the sorted group is [1, 1, 2]
+    val ex = Seq((1L, "k"), (1L, "k"), (2L, "k")).toDF("id", "k")
+    val pairs = Dedup.groupedPairs(ex, "k", struct(col("id")))
+      .select(col("a.id"), col("b.id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(!pairs.exists { case (a, b) => a == b }, "no (x, x) pair")
+    // the self-join's a < b keeps one (1, 2) row per copy of doc 1
+    assert(pairs == Seq((1L, 2L), (1L, 2L)))
+  }
 }
