@@ -30,15 +30,13 @@ import graft.functions.TextFns
   * size-aware [[Scale.groupRanks]] dial FROM BIRTH (ascending order
   * keeps the dial's hot path valid: its range buckets require a
   * monotone leading sort column); the batch rollup is one partial-agg
-  * shuffle whose output is corpus/BatchDocs rows.
-  * `hotGroupsOverride` forces a side for the equivalence spec. */
+  * shuffle whose output is corpus/BatchDocs rows. */
 object Batching {
 
   /** Sequences per batch — the data-loader's micro-batch width. */
   val BatchDocs = 32
 
-  def lengthBatches(docs: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def lengthBatches(docs: DataFrame): DataFrame = {
     // tokens coalesced to 0: a NULL would sort NULLS FIRST in Spark
     // but NULLS LAST in DuckDB, shifting every batch cut (review r16);
     // it would also violate groupedRunningSum's non-null-order contract
@@ -53,8 +51,7 @@ object Batching {
     // is batch-grain (corpus/BatchDocs rows), far smaller than the input
     Dedup.withCached(base) { b =>
       val ranked = Scale.groupRanks(b, Seq("bucket"),
-        Seq(col("tokens"), col("doc_id")), "r",
-        hotGroupsOverride = hotGroupsOverride)
+        Seq(col("tokens"), col("doc_id")), "r")
       ranked
         .withColumn("batch_id", expr(s"(r - 1) div $BatchDocs"))
         .groupBy(col("bucket"), col("batch_id"))

@@ -556,10 +556,8 @@ object Curation {
     * on a handful-valued key — the r9 hot-group shape (the cap is a
     * data-dependent column, so WindowGroupLimit cannot bound it the way
     * it bounds [[sourceCap]]'s literal cap). The rank rides the
-    * size-aware [[Scale.groupRanks]] dial; `hotGroupsOverride` forces a
-    * side for the equivalence spec. */
-  def sourceMix(docs: DataFrame, sharesBp: Map[String, Int],
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+    * size-aware [[Scale.groupRanks]] dial. */
+  def sourceMix(docs: DataFrame, sharesBp: Map[String, Int]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val cnts = docs.groupBy("source").count().collect()
@@ -571,8 +569,7 @@ object Curation {
     val keyed = docs.join(broadcast(caps.toDF("source", "_cap")), "source")
       .withColumn("_h", TextFns.md5u56(col("doc_id").cast("string")))
     Scale.groupRanks(keyed, Seq("source"),
-        Seq(col("_h"), col("doc_id")), "rank_in_source",
-        hotGroupsOverride = hotGroupsOverride)
+        Seq(col("_h"), col("doc_id")), "rank_in_source")
       .filter(col("rank_in_source") <= col("_cap"))
       .drop("_cap", "_h")
   }
@@ -673,13 +670,11 @@ object Curation {
     * a #sources-row result (control plane); caps broadcast back; then a
     * per-source running sum of EVERY doc's tokens on a handful-valued
     * key — the r9 hot-group shape — riding the size-aware
-    * [[Scale.hotGroups]] dial: plain window small,
-    * [[Scale.groupedRunningSum]]'s distributed prefix sums past the
-    * crossover. The token projection is computed once and cached across
-    * the totals pass and the selection pass. `hotGroupsOverride` forces
-    * a side for the equivalence spec. */
-  def sourceMixTokens(docs: DataFrame, sharesBp: Map[String, Int],
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+    * [[Scale.groupRunningSums]] dial: plain window small, distributed
+    * prefix sums past the crossover. The token projection is computed
+    * once and cached across the totals pass and the selection pass. */
+  def sourceMixTokens(docs: DataFrame,
+      sharesBp: Map[String, Int]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val slim = docs.select(col("doc_id"), col("source"),
@@ -693,16 +688,8 @@ object Curation {
       val caps = sharesBp.toSeq.map { case (src, bp) => (src, t * bp / 10000L) }
       val keyed = s.join(broadcast(caps.toDF("source", "_cap")), "source")
         .withColumn("_h", TextFns.md5u56(col("doc_id").cast("string")))
-      val hot = hotGroupsOverride.getOrElse(
-        Scale.hotGroups(keyed, Seq("source")))
-      val cum = if (hot)
-        Scale.groupedRunningSum(keyed, Seq("source"),
+      Scale.groupRunningSums(keyed, Seq("source"),
           Seq(col("_h"), col("doc_id")), col("token_count"), "_cum")
-      else {
-        val w = Window.partitionBy("source").orderBy(col("_h"), col("doc_id"))
-        keyed.withColumn("_cum", sum(col("token_count")).over(w))
-      }
-      cum
         .withColumn("start_tok",
           (col("_cum") - col("token_count")).cast("long"))
         .filter(col("start_tok") < col("_cap"))

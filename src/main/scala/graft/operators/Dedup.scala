@@ -671,11 +671,16 @@ object Dedup {
     // min(struct(−n_chars, doc_id)) — structs compare lexicographically.
     // Singletons (not in the label table) keep themselves; a singleton's
     // id can never equal a matched cluster's id (cluster ids are ids OF
-    // matched docs), so the left join below cannot mislabel one.
+    // matched docs), so the left join below cannot mislabel one. The
+    // twin's ORDER BY n_chars DESC puts nulls LAST: the leading null
+    // flag sorts them after every sized member, and the negation runs in
+    // decimal so no BIGINT n_chars wraps.
     val slim = docs.select(col("doc_id"), col("n_chars"))
     val survivors = clusters.join(slim, Seq("doc_id"))
       .groupBy(col("matched_cluster").as("cluster_id"))
-      .agg(min(struct((-col("n_chars")).as("neg"), col("doc_id").as("d")))
+      .agg(min(struct(col("n_chars").isNull.as("nul"),
+          (-col("n_chars").cast("decimal(20,0)")).as("neg"),
+          col("doc_id").as("d")))
         .as("s"))
       .select(col("cluster_id"), col("s.d").as("survivor_id"))
     slim

@@ -217,10 +217,8 @@ object Diagnostics {
     * the rank comes from [[Scale.globalRank]]'s distributed
     * range-partition rank — max task one range partition at any user
     * cardinality. The event count is the cheap first bound (users ≤
-    * events); only a plausibly-hot table pays the exact user count.
-    * `hotOverride` forces a side for the equivalence spec. */
-  def userConcentration(events: DataFrame, pct: Int = 1,
-      hotOverride: Option[Boolean] = None): DataFrame = {
+    * events); only a plausibly-hot table pays the exact user count. */
+  def userConcentration(events: DataFrame, pct: Int = 1): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val perUser = events.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"))
@@ -248,7 +246,7 @@ object Diagnostics {
           col("top_events"), col("share_milli"))
     }
 
-    Scale.ungroupedDial(hotOverride, events.count(), perUser)(
+    Scale.ungroupedDial(events.count(), perUser)(
       on(_, hot = false))((pu, _) => on(pu, hot = true))
   }
 

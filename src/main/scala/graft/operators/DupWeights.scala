@@ -91,12 +91,13 @@ object DupWeights {
 
   /** Per-source batch ranks ride [[Scale.globalRankGrouped]] by default
     * — sources are a handful-valued key, the VERDICT-r9 hot-group window
-    * shape — with the plain window behind the [[Scale.hotGroups]] dial. */
-  def paddingWaste(docs: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+    * shape — with the plain window behind the [[Scale.hotGroups]] dial.
+    * The dial is read once, not per rank as [[Scale.groupRanks]] would:
+    * both rank passes (by length, by id) rank the same frame. */
+  def paddingWaste(docs: DataFrame): DataFrame = {
     val lens = docs.select(col("doc_id"), col("source"),
       TextFns.wordCount(col("text")).cast("long").as("len"))
-    val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(lens, Seq("source")))
+    val hot = Scale.hotGroups(lens, Seq("source"))
     def wasteUnder(orderCol: String, label: String): DataFrame = {
       val ranked = if (hot)
         Scale.globalRankGrouped(lens, Seq("source"),

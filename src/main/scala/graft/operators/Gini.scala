@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,8 +22,7 @@ import graft.Tables
 object Gini {
 
   /** Per-nation Gini of customer total order spend (buyers only). */
-  def giniBySpend(customer: DataFrame, orders: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def giniBySpend(customer: DataFrame, orders: DataFrame): DataFrame = {
     val spend = orders.groupBy(col("o_custkey"))
       .agg((sum(col("o_totalprice").cast("decimal(14,2)")) * 100)
         .cast("long").as("cents"))
@@ -32,13 +30,8 @@ object Gini {
       .join(customer.select(col("c_custkey"), col("c_nationkey").as("nation")),
         col("c_custkey") === col("o_custkey"))
       .select(col("nation"), col("cents"), col("c_custkey"))
-    val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(j, Seq("nation")))
-    val ranked = if (hot)
-      Scale.globalRankGrouped(j, Seq("nation"),
-        Seq(col("cents"), col("c_custkey")), "rnk")
-    else
-      j.withColumn("rnk", row_number().over(Window.partitionBy(col("nation"))
-        .orderBy(col("cents"), col("c_custkey"))).cast("long"))
+    val ranked = Scale.groupRanks(j, Seq("nation"),
+      Seq(col("cents"), col("c_custkey")), "rnk")
     // rs ~ n·Σcents/2 blows through Int64 at ~millions of members per
     // group (ADVICE r10: Spark wraps silently under non-ANSI while the
     // DuckDB twin errors) — the rank-weighted sum and the 1000× numerator

@@ -73,6 +73,13 @@ object Graph {
     * a per-round broadcast repeated `iterations` times. */
   val BroadcastNodeCap = 2000000L
 
+  /** The node-count dial every graph operator here shares: broadcast the
+    * node-sized table while the graph has ≤ [[BroadcastNodeCap]] nodes.
+    * A side forced by [[graft.operators.Scale.forcingSide]] wins
+    * (at-scale = the shuffle side). */
+  private def broadcastsNodes(nNodes: Long): Boolean =
+    graft.operators.Scale.forced.fold(nNodes <= BroadcastNodeCap)(!_)
+
   /** `Iterations` damped fixed-point PageRank rounds over (src, dst)
     * edges. Every node appears as a src (edges are bidirectional), so
     * out-degrees double as the node list.
@@ -84,11 +91,9 @@ object Graph {
     * must NOT re-broadcast an O(#nodes) table per round — instead the
     * edge table is hash-partitioned on `src` ONCE (materialized, reused
     * every round) and only the #nodes-row rank table shuffles to meet
-    * it. `broadcastRanks` forces a side for the equivalence spec; the
-    * two plans are result-identical because the arithmetic is integer
-    * fixed-point either way. */
-  def pageRank(edges: DataFrame, iterations: Int = Iterations,
-      broadcastRanks: Option[Boolean] = None): DataFrame = {
+    * it. The two plans are result-identical because the arithmetic is
+    * integer fixed-point either way. */
+  def pageRank(edges: DataFrame, iterations: Int = Iterations): DataFrame = {
     val cached = edges.cache()
     val deg = cached.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
@@ -99,7 +104,7 @@ object Graph {
     // plan-BUILD time (ADVICE r9); return the (empty) ranks frame instead
     if (nNodes == 0L)
       return deg.select(col("node"), col("outdeg"), lit(0L).as("rank_fp"))
-    val useBroadcast = broadcastRanks.getOrElse(nNodes <= BroadcastNodeCap)
+    val useBroadcast = broadcastsNodes(nNodes)
     // shuffle mode pays one up-front edge shuffle; localCheckpoint
     // materializes it WITH its HashPartitioning(src) preserved, so every
     // round's join reuses the layout and moves only rank rows
@@ -188,14 +193,14 @@ object Graph {
     * bucketed write. Identical integer fixed-point arithmetic over the
     * identical edge multiset ⇒ bit-equal to [[pageRank]] (spec-pinned
     * both modes; shares the oPageRank twin). */
-  def pageRankBucketed(edges: DataFrame, iterations: Int = Iterations,
-      broadcastShare: Option[Boolean] = None): DataFrame = {
+  def pageRankBucketed(edges: DataFrame,
+      iterations: Int = Iterations): DataFrame = {
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     val nNodes = deg.count()
     if (nNodes == 0L)
       return deg.select(col("node"), col("outdeg"), lit(0L).as("rank_fp"))
-    val useBroadcast = broadcastShare.getOrElse(nNodes <= BroadcastNodeCap)
+    val useBroadcast = broadcastsNodes(nNodes)
     var ranks = deg
       .withColumn("init_fp", lit(Scale / nNodes))
       .select(col("node"), col("outdeg"), col("init_fp"),
@@ -549,8 +554,7 @@ object Graph {
     * exchange-free plan; seeds must exist in the graph (semi-join, the
     * BFS-sources rule). */
   def personalizedPageRankBucketed(edges: DataFrame, seeds: DataFrame,
-      iterations: Int = Iterations,
-      broadcastShare: Option[Boolean] = None): DataFrame = {
+      iterations: Int = Iterations): DataFrame = {
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     val seedNodes = seeds.select(col("node")).distinct()
@@ -561,7 +565,7 @@ object Graph {
     val nSeeds = seedNodes.count()
     if (nNodes == 0L || nSeeds == 0L)
       return deg.select(col("node"), col("outdeg"), lit(0L).as("rank_fp"))
-    val useBroadcast = broadcastShare.getOrElse(nNodes <= BroadcastNodeCap)
+    val useBroadcast = broadcastsNodes(nNodes)
     var ranks = deg
       .join(broadcast(seedNodes.withColumn("_s", lit(1))), Seq("node"), "left")
       .withColumn("init_fp",
@@ -671,14 +675,13 @@ object Graph {
     * ([[qHitsServing]] pins src-side zero-exchange on the hub join).
     * Exact integer floor divisions ⇒ bit-equal to the unrolled-CTE
     * DuckDB twin after any iteration count. */
-  def hits(edges: DataFrame, iterations: Int = HitsIterations,
-      broadcastScores: Boolean = false): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int = HitsIterations): DataFrame = {
     val cached = edges.cache()
     // scope the cache to the run: every half-step localCheckpoints
     // eagerly, so by return nothing downstream re-reads the cached
     // edges — an unscoped cache() would accumulate blocks for the
     // SparkSession lifetime across repeated invocations (ADVICE r14)
-    try hitsOn(cached, cached, iterations, broadcastScores)
+    try hitsOn(cached, cached, iterations, broadcastScores = false)
     finally cached.unpersist(false)
   }
 
@@ -831,7 +834,7 @@ object Graph {
     val eSrc = spark.table("b3_hits_src")
     val eDst = spark.table("b3_hits_dst")
     hitsTop(hitsOn(eSrc, eDst, HitsIterations,
-      broadcastScores = n <= BroadcastNodeCap))
+      broadcastScores = broadcastsNodes(n)))
   }
 
   /** Twin: the identical integer recurrence, iterations unrolled as

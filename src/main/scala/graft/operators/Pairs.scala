@@ -105,10 +105,8 @@ object Pairs {
     * handful-valued key — the r9 hot-group shape — so it rides the
     * size-aware [[Scale.groupRanks]] dial (plain window small,
     * distributed prefix-sum ranks once a source passes the crossover);
-    * plus a ≤K-row broadcast of source indexes. `hotGroupsOverride`
-    * forces a side for the equivalence spec. */
-  def interleaveSources(docs: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+    * plus a ≤K-row broadcast of source indexes. */
+  def interleaveSources(docs: DataFrame): DataFrame = {
     val srcIdx = docs.select(col("source")).distinct()
       .withColumn("src_idx",
         row_number().over(Window.orderBy(col("source"))) - 1)
@@ -117,8 +115,7 @@ object Pairs {
         TextFns.md5u56(concat_ws(":", col("doc_id"), lit("il"))).as("shuffle_key"))
       .join(broadcast(srcIdx), Seq("source"))
     Scale.groupRanks(keyed, Seq("source"),
-        Seq(col("shuffle_key"), col("doc_id")), "src_rank",
-        hotGroupsOverride = hotGroupsOverride)
+        Seq(col("shuffle_key"), col("doc_id")), "src_rank")
       .select(col("doc_id"), col("source"),
         ((col("src_rank") - 1) * lit(k) + col("src_idx")).cast("long")
           .as("position"))

@@ -30,10 +30,8 @@ object Pareto {
     * [[Scale.globalRankAndRunningSum]]'s range-partition + broadcast-
     * offset pattern, max task one range partition at any entity count.
     * The fact count is the cheap first bound (the rollup can never
-    * exceed it); only a plausibly-hot fact pays the exact rollup count.
-    * `hotOverride` forces a side for the equivalence spec. */
-  def supplierPareto(lineitem: DataFrame,
-      hotOverride: Option[Boolean] = None): DataFrame = {
+    * exceed it); only a plausibly-hot fact pays the exact rollup count. */
+  def supplierPareto(lineitem: DataFrame): DataFrame = {
     val rev = lineitem
       .select(col("l_suppkey"),
         (col("l_extendedprice").cast("decimal(14,2)") *
@@ -72,7 +70,7 @@ object Pareto {
         .drop("_cum"))
     }
 
-    Scale.ungroupedDial(hotOverride, lineitem.count(), rev)(
+    Scale.ungroupedDial(lineitem.count(), rev)(
       plainOn)((r, _) => hotOn(r))
   }
 

@@ -26,18 +26,16 @@ import graft.Tables
   * and swaps onto [[Scale.globalRankGrouped]]'s distributed prefix
   * sums once any group passes [[Scale.HotGroupMinRowsPerGroup]] — max
   * task one (group, bucket) cell, never 1/|types| of events, with the
-  * group size `n` riding the collected offsets for free.
-  * `hotGroupsOverride` forces a side for the equivalence spec. */
+  * group size `n` riding the collected offsets for free. */
 object Profile {
 
   val Buckets = 10
 
-  def equiDepth(events: DataFrame, buckets: Int = Buckets,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def equiDepth(events: DataFrame, buckets: Int = Buckets): DataFrame = {
     val base = events.select(col("event_type"), col("event_id"), col("value"))
     Scale.groupRanks(base, Seq("event_type"),
         Seq(col("value"), col("event_id")),
-        "rnk", totalOut = Some("n"), hotGroupsOverride = hotGroupsOverride)
+        "rnk", totalOut = Some("n"))
       .withColumn("bucket",
         expr(s"((rnk - 1) * $buckets) div n").cast("long"))
       .groupBy(col("event_type"), col("bucket"))
@@ -58,24 +56,20 @@ object Profile {
     * 5-value hot-group shape as [[equiDepth]] and rides the same
     * [[Scale.groupRanks]] dial (o_orderpriority has FIVE values, so at
     * 100× a plain window is five single-task sorts of lineitem/5). */
-  def shipLatency(lineitem: DataFrame, orders: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def shipLatency(lineitem: DataFrame, orders: DataFrame): DataFrame = {
     val base = lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_orderpriority"),
         datediff(col("l_shipdate"), col("o_orderdate")).cast("long").as("lag_days"),
         col("l_orderkey"), col("l_linenumber"))
-    // dial guard: the inner FK join emits each lineitem row at most
-    // once, so no priority group can exceed the FACT row count — an
-    // empty-projection count over the fact scan (parquet footer
-    // row counts) is far cheaper than Scale.hotGroups' 1% sampled scan
-    // of the JOIN, which would execute the join a second time
-    val guard = hotGroupsOverride.orElse(
-      if (lineitem.count() < Scale.HotGroupMinRowsPerGroup) Some(false)
-      else None)
+    // the inner FK join emits each lineitem row at most once, so no
+    // priority group can exceed the FACT row count — an empty-projection
+    // count over the fact scan (parquet footer row counts) settles the
+    // dial far cheaper than Scale.hotGroups' 1% sampled scan of the
+    // JOIN, which would execute the join a second time
     Scale.groupRanks(base, Seq("o_orderpriority"),
         Seq(col("lag_days"), col("l_orderkey"), col("l_linenumber")),
-        "rnk", totalOut = Some("n"), hotGroupsOverride = guard)
+        "rnk", totalOut = Some("n"), factCount = lineitem.count())
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_lines"),
         floor(sum(col("lag_days")) * lit(1000L).cast("double") / count(lit(1)))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,15 +22,14 @@ import graft.Tables
   * Scale shape (100 TB): a corpus has a HANDFUL of sources, so
   * within-source ranks ride [[Scale.globalRankGrouped]] (range
   * partition + per-group offsets — max task one range partition, never
-  * 1/|sources| of the corpus) with source sizes from a hash aggregate;
+  * 1/|sources| of the corpus) with source sizes from the collected offsets;
   * the plain source-partitioned window survives behind the
   * [[Scale.hotGroups]] dial for high-cardinality grouping. The global
   * rank is [[Scale.globalRank]] (same offset pattern, ungrouped); the
   * map itself is an equi-join on rank. */
 object QuantNorm {
 
-  def quantileNormalize(docs: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def quantileNormalize(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("source"), col("n_chars"))
     // ONE pass over the corpus: base is persisted for the whole rank
     // build, so the rank's control-plane passes AND its ranking pass
@@ -48,18 +46,9 @@ object QuantNorm {
           Seq(col("n_chars"), col("doc_id")), "g_rank", 32)
         (Dedup.materialized(g0), n0)
       } finally base.unpersist(false)
-    val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(g, Seq("source")))
-    val ranked = if (hot) {
-      // source sizes ride the collected offsets — no extra agg pass
-      Scale.globalRankGrouped(g, Seq("source"),
-        Seq(col("n_chars"), col("doc_id")), "r", totalOut = Some("n_s"))
-    } else {
-      val ws = Window.partitionBy(col("source"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      g.withColumn("r", row_number().over(ws).cast("long"))
-        .withColumn("n_s",
-          count(lit(1)).over(Window.partitionBy(col("source"))).cast("long"))
-    }
+    // on the distributed side source sizes ride the collected offsets
+    val ranked = Scale.groupRanks(g, Seq("source"),
+      Seq(col("n_chars"), col("doc_id")), "r", totalOut = Some("n_s"))
     val lookup = g.select(col("g_rank"), col("n_chars").as("norm_chars"))
     ranked.drop("g_rank")
       .withColumn("g_rank", expr(s"(r * ${nn}L + n_s - 1) div n_s"))
@@ -102,13 +91,11 @@ object QuantNorm {
     * Scale shape: event_type is a ~5-value key, so the rank rides the
     * size-aware [[Scale.groupRanks]] dial (the r15 audit discipline);
     * bounds are a |groups|-row broadcast back onto the scan. */
-  def winsorize(events: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def winsorize(events: DataFrame): DataFrame = {
     val base = events.select(col("event_id"), col("event_type"), col("value"))
       .filter(col("value").isNotNull)
     val ranked = Scale.groupRanks(base, Seq("event_type"),
-      Seq(col("value"), col("event_id")), "r", totalOut = Some("n"),
-      hotGroupsOverride = hotGroupsOverride)
+      Seq(col("value"), col("event_id")), "r", totalOut = Some("n"))
     val bounds = ranked.groupBy(col("event_type"))
       .agg(max(when(col("r") === expr("(n + 19) div 20"), col("value")))
           .as("lo"),

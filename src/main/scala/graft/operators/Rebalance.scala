@@ -73,8 +73,8 @@ object Rebalance {
   /** Temperature-rebalanced selection: every `groupCol` group keeps its
     * first q_i rows by hash rank. Output carries the group's raw count
     * and quota so the rebalance is auditable row-by-row. */
-  def sourceMixTemperature(docs: DataFrame, groupCol: String, target: Long,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def sourceMixTemperature(docs: DataFrame, groupCol: String,
+      target: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val counts = docs.groupBy(col(groupCol)).count().collect()
@@ -84,7 +84,7 @@ object Rebalance {
     val ranked = Scale.groupRanks(
       docs.select(col("doc_id"), col(groupCol)), Seq(groupCol),
       Seq(TextFns.md5u56(col("doc_id").cast("string")), col("doc_id")),
-      "rank_in_group", None, hotGroupsOverride)
+      "rank_in_group")
     // <=> keeps the null group joined to its own quota row — a plain
     // equi-join silently drops every null-group document
     ranked.join(qDf, ranked(groupCol).cast("string") <=> qDf("_graft_g"))
@@ -129,12 +129,10 @@ object Rebalance {
     * in id-hash order until its quota under the greedy boundary rule
     * (the doc straddling the cap is kept — `start_tok < quota`, the
     * [[Curation.sourceMixTokens]] convention). Running token sums ride
-    * the [[Scale.hotGroups]] dial: a per-group window while every
-    * group fits one sort task, [[Scale.groupedRunningSum]]'s
-    * distributed prefix sums for few giant groups. */
+    * [[Scale.groupRunningSums]]: a per-group window while every group
+    * fits one sort task, distributed prefix sums for few giant groups. */
   def sourceMixTemperatureTokens(docs: DataFrame, groupCol: String,
-      targetTokens: Long,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+      targetTokens: Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val slim = docs.select(col("doc_id"), col(groupCol),
@@ -148,18 +146,10 @@ object Rebalance {
         quotas.toDF("_graft_g", "group_tokens", "token_quota"))
       val order = Seq(TextFns.md5u56(col("doc_id").cast("string")),
         col("doc_id"))
-      val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(s, Seq(groupCol)))
-      val cum =
-        if (hot) Scale.groupedRunningSum(s, Seq(groupCol), order,
+      val cum = Scale.groupRunningSums(s, Seq(groupCol), order,
           col("token_count"), "cum_tok")
-        else {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(groupCol)).orderBy(order: _*)
-          s.withColumn("cum_tok", sum(col("token_count")).over(w).cast("long"))
-        }
-      val cum2 = cum.withColumn("start_tok",
-        col("cum_tok") - col("token_count"))
-      cum2.join(qDf, cum2(groupCol).cast("string") <=> qDf("_graft_g"))
+        .withColumn("start_tok", col("cum_tok") - col("token_count"))
+      cum.join(qDf, cum(groupCol).cast("string") <=> qDf("_graft_g"))
         .filter(col("start_tok") < col("token_quota"))
         .select(col("doc_id"), col(groupCol), col("token_count"),
           col("start_tok"), col("group_tokens"), col("token_quota"))
@@ -208,14 +198,14 @@ object Rebalance {
     * caller passes the frozen quantizer), then keep each cell's first
     * `cap` vectors by hash rank. `cluster_size` carries the pre-cap
     * population so the report doubles as the imbalance diagnostic. */
-  def clusterBalance(emb: DataFrame, cents: Seq[Array[Double]], cap: Long,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame =
+  def clusterBalance(emb: DataFrame, cents: Seq[Array[Double]],
+      cap: Long): DataFrame =
     Scale.groupRanks(
       emb.withColumn("cluster", Ivf.cellOf(col("embedding"), cents))
         .select(col("vec_id"), col("cluster")),
       Seq("cluster"),
       Seq(TextFns.md5u56(col("vec_id").cast("string")), col("vec_id")),
-      "rank_in_cluster", Some("cluster_size"), hotGroupsOverride)
+      "rank_in_cluster", Some("cluster_size"))
       .filter(col("rank_in_cluster") <= cap)
       .select(col("vec_id"), col("cluster"), col("cluster_size"),
         col("rank_in_cluster"))

@@ -33,8 +33,7 @@ import graft.Tables
   * entity count. The fact-count guard is the cheap bound (the rollup
   * can never exceed the fact row count), so the common not-hot case
   * never materializes the rollup twice; only a plausibly-hot fact pays
-  * the exact rollup count — which the scalable form needs anyway.
-  * `hotOverride` forces a side for the equivalence spec. */
+  * the exact rollup count — which the scalable form needs anyway. */
 object Rfm {
 
   private def rollup(orders: DataFrame): DataFrame =
@@ -71,8 +70,8 @@ object Rfm {
       .withColumn("m_score", ntile(5).over(mW)))
   }
 
-  def rfm(orders: DataFrame, hotOverride: Option[Boolean] = None): DataFrame =
-    Scale.ungroupedDial(hotOverride, orders.count(), rollup(orders))(
+  def rfm(orders: DataFrame): DataFrame =
+    Scale.ungroupedDial(orders.count(), rollup(orders))(
       plainOn)((b, n) => scalableOn(b, n(), 32))
 
   def qRfm(spark: SparkSession, dir: String): DataFrame =

@@ -25,15 +25,14 @@ object Robust {
   val TrimDen = 20
 
   /** Per-flag 5%-trimmed mean of extended price (exact cents). */
-  def trimmedMean(lineitem: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def trimmedMean(lineitem: DataFrame): DataFrame = {
     val base = lineitem.select(col("l_returnflag"),
       (col("l_extendedprice").cast("decimal(14,2)") * 100).cast("long")
         .as("cents"),
       col("l_orderkey"), col("l_linenumber"))
     val ranked = Scale.groupRanks(base, Seq("l_returnflag"),
       Seq(col("cents"), col("l_orderkey"), col("l_linenumber")),
-      "r", totalOut = Some("n"), hotGroupsOverride = hotGroupsOverride)
+      "r", totalOut = Some("n"))
     ranked
       .filter(col("r") > expr(s"n div $TrimDen") &&
         col("r") <= col("n") - expr(s"n div $TrimDen"))
@@ -79,15 +78,14 @@ object Robust {
     * 3-row median (measured 4.6 s; reusing the materialized ranks cuts
     * the source to one scan + two rank passes, the honest floor for a
     * data-dependent second ordering). */
-  def madByFlag(lineitem: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def madByFlag(lineitem: DataFrame): DataFrame = {
     val base = lineitem.select(col("l_returnflag"),
       (col("l_extendedprice").cast("decimal(14,2)") * 100).cast("long")
         .as("cents"),
       col("l_orderkey"), col("l_linenumber"))
     val r1 = Scale.groupRanks(base, Seq("l_returnflag"),
       Seq(col("cents"), col("l_orderkey"), col("l_linenumber")),
-      "r", totalOut = Some("n"), hotGroupsOverride = hotGroupsOverride)
+      "r", totalOut = Some("n"))
     Dedup.withCached(r1) { ranked =>
       val med = ranked.filter(col("r") * 2 === col("n") + (col("n") % 2))
         .select(col("l_returnflag"), col("cents").as("med_cents"))
@@ -97,7 +95,7 @@ object Robust {
           col("l_orderkey"), col("l_linenumber"))
       val r2 = Scale.groupRanks(dev, Seq("l_returnflag"),
         Seq(col("dev"), col("l_orderkey"), col("l_linenumber")),
-        "r", totalOut = Some("n"), hotGroupsOverride = hotGroupsOverride)
+        "r", totalOut = Some("n"))
       r2.filter(col("r") * 2 === col("n") + (col("n") % 2))
         .select(col("l_returnflag"), col("med_cents"),
           col("dev").as("mad_cents"), col("n"))

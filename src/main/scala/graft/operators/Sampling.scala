@@ -77,23 +77,11 @@ object Sampling {
     *
     * Gated at the audit grain: (source, split) → count + id-sum — any
     * mis-assigned doc flips the fingerprint. */
-  def exactSplit(docs: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def exactSplit(docs: DataFrame): DataFrame = {
     val keyed = docs.select(col("doc_id"), col("source"),
       TextFns.md5u56(col("doc_id").cast("string")).as("h"))
-    val hot = hotGroupsOverride.getOrElse(Scale.hotGroups(keyed, Seq("source")))
-    val ranked = if (hot)
-      Scale.globalRankGrouped(keyed, Seq("source"),
-        Seq(col("h"), col("doc_id")), "r", totalOut = Some("n_s"))
-    else {
-      import org.apache.spark.sql.expressions.Window
-      keyed
-        .withColumn("r", row_number().over(Window.partitionBy(col("source"))
-          .orderBy(col("h"), col("doc_id"))).cast("long"))
-        .withColumn("n_s", count(lit(1))
-          .over(Window.partitionBy(col("source"))).cast("long"))
-    }
-    ranked
+    Scale.groupRanks(keyed, Seq("source"), Seq(col("h"), col("doc_id")),
+        "r", totalOut = Some("n_s"))
       .withColumn("split",
         when(col("r") * 10 <= col("n_s") * 8, "train")
           .when(col("r") * 10 <= col("n_s") * 9, "val")

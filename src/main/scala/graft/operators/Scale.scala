@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -10,6 +11,25 @@ import graft.Tables
   * cardinalities/quantiles that stop fitting exact computation.
   */
 object Scale {
+
+  /** The side the size dials take inside [[forcingSide]]; empty (the
+    * production state) means every dial measures. */
+  private val forcedSide = new scala.util.DynamicVariable(Option.empty[Boolean])
+
+  /** Run `body` with every size dial forced to one side — the single
+    * handle the equivalence specs use to run both plans of an operator
+    * on a fixture that would only ever pick one. `atScale = true` is the
+    * distributed side ([[globalRankGrouped]] / [[groupedRunningSum]],
+    * [[ungroupedDial]]'s hot path, [[Graph]]'s shuffle joins); `false`
+    * the plain window / broadcast side. The dials ([[hotGroups]],
+    * [[ungroupedDial]], Graph's node-count choice) read this before
+    * measuring anything; the previous side is restored when `body`
+    * returns or throws. */
+  private[graft] def forcingSide[A](atScale: Boolean)(body: => A): A =
+    forcedSide.withValue(Some(atScale))(body)
+
+  /** The side [[forcingSide]] forces here, if any. */
+  private[graft] def forced = forcedSide.value
 
   /** Strict-prefix fold over per-partition control-plane rows (sorted
     * by pid): out(i) = step-fold of every row BEFORE partition i,
@@ -204,12 +224,11 @@ object Scale {
     * count, so a small fact settles the dial without materializing the
     * rollup twice (and is only evaluated when needed); only a
     * plausibly-hot fact pays the exact rollup count, over a cache the
-    * hot path needs materialized anyway. `hotOverride` forces a side
-    * for the equivalence specs. */
-  def ungroupedDial(hotOverride: Option[Boolean], factCount: => Long,
-      rollup: DataFrame)(plain: DataFrame => DataFrame)(
+    * hot path needs materialized anyway. */
+  def ungroupedDial(factCount: => Long, rollup: DataFrame)(
+      plain: DataFrame => DataFrame)(
       hot: (DataFrame, () => Long) => DataFrame): DataFrame =
-    hotOverride match {
+    forced match {
       case Some(false) => plain(rollup)
       case Some(true) => Dedup.withCached(rollup) { b =>
         // the count is LAZY (ADVICE r16): hot consumers that discard n
@@ -449,14 +468,6 @@ object Scale {
       math.min(HotGroupMinRowsPerGroup * 16, HotGroupSortBytes / w))
   }
 
-  /** The dial the hot-group family shares (the `BroadcastNodeCap`
-    * pattern): distributed prefix sums engage only when groups are FEW
-    * (the offsets control plane stays collectable) AND individually
-    * GIANT (a per-group window task would sort more than
-    * [[HotGroupMinRowsPerGroup]] rows — the single-task-sort
-    * scale-killer). Many small groups keep the plain window: each
-    * window task is already bounded. Two partial-agg control-plane
-    * scalars drive the plan, like [[Graph.pageRank]]'s node count. */
   /** True when `df` is a bare projection over leaf scans — the shape
     * whose count() the parquet reader answers from footer row counts
     * without decoding a single column, strictly cheaper than even the
@@ -486,8 +497,25 @@ object Scale {
     }
   }
 
-  def hotGroups(df: DataFrame, groups: Seq[String]): Boolean = {
+  /** The dial the hot-group family shares (the `BroadcastNodeCap`
+    * pattern): distributed prefix sums engage only when groups are FEW
+    * (the offsets control plane stays collectable) AND individually
+    * GIANT (a per-group window task would sort more than
+    * [[HotGroupMinRowsPerGroup]] rows — the single-task-sort
+    * scale-killer). Many small groups keep the plain window: each
+    * window task is already bounded. Two partial-agg control-plane
+    * scalars drive the plan, like [[Graph.pageRank]]'s node count.
+    * `factCount` is an optional upper bound on any group's size (the
+    * fact row count under an FK join, [[ungroupedDial]]'s bound): a
+    * small one settles the dial before any pass over `df`. */
+  def hotGroups(df: DataFrame, groups: Seq[String],
+      factCount: => Long = Long.MaxValue): Boolean =
+    forced.getOrElse(measuredHot(df, groups, factCount))
+
+  private def measuredHot(df: DataFrame, groups: Seq[String],
+      factCount: => Long): Boolean = {
     val threshold = hotRowThreshold(df)
+    if (factCount < threshold) return false
     // footer-count fast path (r16 dialcost probe): on a bare scan the
     // TOTAL row count bounds every group, and count() costs footer
     // metadata only — the common not-hot case across the ~20 dial
@@ -514,21 +542,40 @@ object Scale {
   /** Per-group ranks (optionally with group sizes) behind the
     * [[hotGroups]] dial — the shared entry the hot-group window family
     * rides: [[globalRankGrouped]]'s distributed prefix sums for few
-    * giant groups, the plain partitioned window otherwise. */
+    * giant groups, the plain partitioned window otherwise. `factCount`
+    * passes through to the dial. */
   def groupRanks(df: DataFrame, groups: Seq[String], order: Seq[Column],
       out: String, totalOut: Option[String] = None,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
-    val hot = hotGroupsOverride.getOrElse(hotGroups(df, groups))
-    if (hot) globalRankGrouped(df, groups, order, out, 32, totalOut)
+      factCount: => Long = Long.MaxValue): DataFrame =
+    if (hotGroups(df, groups, factCount))
+      globalRankGrouped(df, groups, order, out, 32, totalOut)
     else {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(groups.map(col): _*).orderBy(order: _*)
-      val r = df.withColumn(out, row_number().over(w).cast("long"))
-      totalOut.map(t => r.withColumn(t,
-        count(lit(1)).over(Window.partitionBy(groups.map(col): _*))
-          .cast("long"))).getOrElse(r)
+      val part = Window.partitionBy(groups.map(col): _*)
+      val r = df.withColumn(out, row_number().over(part.orderBy(order: _*))
+        .cast("long"))
+      totalOut.map(t => r.withColumn(t, count(lit(1)).over(part)
+        .cast("long"))).getOrElse(r)
     }
-  }
+
+  /** Per-group inclusive running sums of `value` under `order` behind
+    * the [[hotGroups]] dial — the running-sum sibling of [[groupRanks]]:
+    * [[groupedRunningSum]] for few giant groups, the plain partitioned
+    * ROWS window otherwise. `order` must make (groups ++ order) a total
+    * order; `totalOut` emits each group's total sum. Both columns are
+    * BIGINT on either side. */
+  def groupRunningSums(df: DataFrame, groups: Seq[String],
+      order: Seq[Column], value: Column, out: String,
+      totalOut: Option[String] = None): DataFrame =
+    if (hotGroups(df, groups))
+      groupedRunningSum(df, groups, order, value, out, 32, totalOut)
+    else {
+      val part = Window.partitionBy(groups.map(col): _*)
+      val r = df.withColumn(out, sum(value).over(part.orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("long"))
+      totalOut.map(t => r.withColumn(t, sum(value).over(part).cast("long")))
+        .getOrElse(r)
+    }
 
   /** Two-phase salted aggregation for skewed group keys: partial
     * aggregate by (keys, salt) — spreading a hot key over `saltBuckets`

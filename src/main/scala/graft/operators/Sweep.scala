@@ -25,19 +25,17 @@ import graft.Tables
   *
   * Scale shape (100 TB): the sweep's running sum is 2n boundary rows
   * on a ~5-value key — the r9 hot-group shape — so it rides the
-  * [[Scale.hotGroups]] dial: plain per-type window while groups are
-  * small, [[Scale.groupedRunningSum]]'s distributed prefix sums (value
-  * = ±1 delta) once a type's boundary stream passes the measured
-  * crossover — max task one (type, time-bucket) cell, never 2n/|types|
-  * rows. `hotGroupsOverride` forces a side for the equivalence spec.
+  * [[Scale.groupRunningSums]] dial: plain per-type window while groups
+  * are small, distributed prefix sums (value = ±1 delta) once a type's
+  * boundary stream passes the measured crossover — max task one (type,
+  * time-bucket) cell, never 2n/|types| rows.
   * The backtest reduces the corpus to #days × #types rows before any
   * window runs (grain-bounded, no dial needed). */
 object Sweep {
 
   val HoldSeconds = 60
 
-  def peakConcurrency(events: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def peakConcurrency(events: DataFrame): DataFrame = {
     val starts = events.select(col("event_type"), col("ts").as("t"),
       lit(1L).as("delta"), col("event_id"))
     val ends = events.select(col("event_type"),
@@ -51,19 +49,10 @@ object Sweep {
     val bounds = starts.union(ends)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val hot = hotGroupsOverride.getOrElse(
-        Scale.hotGroups(bounds, Seq("event_type")))
-      val running = if (hot) {
-        // timestamps cast to epoch-seconds doubles for the deterministic
-        // range buckets; order and ties are unchanged
-        Scale.groupedRunningSum(bounds, Seq("event_type"),
-          Seq(col("t"), col("delta"), col("event_id")), col("delta"), "run")
-      } else {
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(col("t"), col("delta"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        bounds.withColumn("run", sum(col("delta")).over(w))
-      }
+      // distributed side: timestamps cast to epoch-seconds doubles for
+      // the deterministic range buckets; order and ties are unchanged
+      val running = Scale.groupRunningSums(bounds, Seq("event_type"),
+        Seq(col("t"), col("delta"), col("event_id")), col("delta"), "run")
       Dedup.withCached(running) { r =>
         val peaks = r.groupBy(col("event_type"))
           .agg(max(col("run")).as("peak_concurrency"),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -19,38 +18,24 @@ import graft.Tables
   *
   * Scale shape (100 TB): `l_returnflag` is a THREE-value key, so at
   * scale per-group windows are three giant single-task sorts — the
-  * named scale-killer. The [[Scale.hotGroups]] dial (measured, not
+  * named scale-killer. [[Scale.groupRunningSums]]' dial (measured, not
   * asserted — SCALE.md r10) selects
   * [[Scale.groupedRunningSum]]'s distributed prefix-sum pattern once a
   * group exceeds [[Scale.HotGroupMinRowsPerGroup]] rows — max task one
   * range partition, never ⅓ of lineitem, with group totals riding the
   * collected offsets — and keeps the plain window below it, where one
-  * in-memory sort task measurably beats two shuffles.
-  * `hotGroupsOverride` forces a side for the equivalence spec. */
+  * in-memory sort task measurably beats two shuffles. */
 object WeightedMedian {
 
-  def weightedQuartiles(lineitem: DataFrame,
-      hotGroupsOverride: Option[Boolean] = None): DataFrame = {
+  def weightedQuartiles(lineitem: DataFrame): DataFrame = {
     val base = lineitem.select(col("l_returnflag"),
       col("l_extendedprice").cast("decimal(14,2)").as("price"),
       col("l_quantity").cast("decimal(12,2)").cast("long").as("w"),
       col("l_orderkey"), col("l_linenumber"))
-    val hot = hotGroupsOverride.getOrElse(
-      Scale.hotGroups(base, Seq("l_returnflag")))
-    val cum = if (hot) {
-      // group totals ride the collected offsets — no extra agg pass
-      Scale.groupedRunningSum(base, Seq("l_returnflag"),
-        Seq(col("price"), col("l_orderkey"), col("l_linenumber")),
-        col("w"), "cum", totalOut = Some("total"))
-    } else {
-      val wOrd = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("price"), col("l_orderkey"), col("l_linenumber"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      base
-        .withColumn("cum", sum(col("w")).over(wOrd))
-        .withColumn("total",
-          sum(col("w")).over(Window.partitionBy(col("l_returnflag"))))
-    }
+    // on the distributed side group totals ride the collected offsets
+    val cum = Scale.groupRunningSums(base, Seq("l_returnflag"),
+      Seq(col("price"), col("l_orderkey"), col("l_linenumber")),
+      col("w"), "cum", totalOut = Some("total"))
     def pick(num: Int, den: Int, name: String) =
       max(when(col("cum") * den >= col("total") * num
           && (col("cum") - col("w")) * den < col("total") * num,

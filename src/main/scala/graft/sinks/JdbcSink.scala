@@ -75,11 +75,12 @@ object JdbcSink {
     *
     * The existing-key probe is BOUNDED: the remote scan reads only the
     * key columns (column pruning) within the incoming batch's key range
-    * (predicate pushed into the remote SQL). `bounded = false` restores
-    * the full-table probe for callers whose batches span arbitrary keys. */
+    * (predicate pushed into the remote SQL); a batch with no boundable
+    * key ([[probePredicate]] returns None) falls back to the full-table
+    * probe. */
   def idempotentAppend(spark: SparkSession, df: DataFrame, url: String,
       table: String, keys: Seq[String],
-      props: Properties = new Properties, bounded: Boolean = true): Long = {
+      props: Properties = new Properties): Long = {
     // resolve the remote-side identifier case once (Derby folds unquoted
     // identifiers to uppercase; quoting the reported name is always exact)
     val remoteSchema = readTable(spark, url, table, props).schema
@@ -87,7 +88,7 @@ object JdbcSink {
       remoteSchema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(k)
     def quoted(k: String): String = "\"" + remoteName(k) + "\""
     val keyList = keys.map(quoted).mkString(", ")
-    val existing = (if (bounded) probePredicate(df, keys, quoted) else None) match {
+    val existing = probePredicate(df, keys, quoted) match {
       case Some(pred) =>
         val probe = s"(SELECT $keyList FROM $table WHERE $pred) probe"
         spark.read.jdbc(url, probe, props)

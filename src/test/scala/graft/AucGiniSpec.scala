@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Auc, Gini}
+import graft.operators.{Auc, Gini, Scale}
 
 class AucGiniSpec extends SparkSpecBase {
   import spark.implicits._
@@ -100,7 +100,7 @@ class AucGiniSpec extends SparkSpecBase {
       .toDF("o_custkey", "o_totalprice")
     assert(BigInt(n + 1) * whale > BigInt(Long.MaxValue),
       "fixture no longer exercises the single-product overflow regime")
-    val got = Gini.giniBySpend(cust, ords, hotGroupsOverride = Some(false)).head()
+    val got = Scale.forcingSide(false)(Gini.giniBySpend(cust, ords)).head()
     val cents = Seq.fill(n)(BigInt(1)) :+ whale
     val total = cents.sum
     assert(total < BigInt(Long.MaxValue), "total_cents out of BIGINT contract")
@@ -123,9 +123,9 @@ class AucGiniSpec extends SparkSpecBase {
 
   test("gini grouped-rank path is result-identical to the window path") {
     val (c, o) = (Tables.customer(spark, sf), Tables.orders(spark, sf))
-    val a = Gini.giniBySpend(c, o, Some(true)).orderBy(col("nation"))
+    val a = Scale.forcingSide(true)(Gini.giniBySpend(c, o)).orderBy(col("nation"))
       .collect().map(_.toSeq)
-    val b = Gini.giniBySpend(c, o, Some(false)).orderBy(col("nation"))
+    val b = Scale.forcingSide(false)(Gini.giniBySpend(c, o)).orderBy(col("nation"))
       .collect().map(_.toSeq)
     assert(a.toSeq == b.toSeq)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Batching
+import graft.operators.{Batching, Scale}
 
 /** Length-bucketed batch packing: hand-computed padding account,
   * partition invariants, and the forced-switch dial equivalence. */
@@ -80,9 +80,9 @@ class BatchingSpec extends SparkSpecBase {
 
   test("grouped prefix-sum path ≡ window path") {
     val docs = Tables.documents(spark, sf)
-    val grouped = Batching.lengthBatches(docs, Some(true))
+    val grouped = Scale.forcingSide(true)(Batching.lengthBatches(docs))
       .orderBy(col("bucket"), col("batch_id")).collect().map(_.toSeq)
-    val windowed = Batching.lengthBatches(docs, Some(false))
+    val windowed = Scale.forcingSide(false)(Batching.lengthBatches(docs))
       .orderBy(col("bucket"), col("batch_id")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window batching diverge")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.DupWeights
+import graft.operators.{DupWeights, Scale}
 
 class DupWeightsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -39,9 +39,9 @@ class DupWeightsSpec extends SparkSpecBase {
 
   test("padding waste grouped-rank path is result-identical to the window path") {
     val docs = Tables.documents(spark, sf)
-    val grouped = DupWeights.paddingWaste(docs, Some(true))
+    val grouped = Scale.forcingSide(true)(DupWeights.paddingWaste(docs))
       .orderBy(col("source")).collect().map(_.toSeq)
-    val windowed = DupWeights.paddingWaste(docs, Some(false))
+    val windowed = Scale.forcingSide(false)(DupWeights.paddingWaste(docs))
       .orderBy(col("source")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window padding waste diverge")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Auc, Quantiles, Sampling}
+import graft.operators.{Auc, Quantiles, Sampling, Scale}
 
 /** Round-10 additions: exact-proportion splits, exact-k sampling,
   * grouped scalable quantiles, PR operating points. */
@@ -23,9 +23,9 @@ class ExactSplitSpec extends SparkSpecBase {
       assert(out((src, "test")) == n - train - valN, s"$src test")
     }
     // forced-switch equality (the hotGroups dial rides here too)
-    val a = Sampling.exactSplit(docs, Some(true))
+    val a = Scale.forcingSide(true)(Sampling.exactSplit(docs))
       .orderBy(col("source"), col("split")).collect().map(_.toSeq)
-    val b = Sampling.exactSplit(docs, Some(false))
+    val b = Scale.forcingSide(false)(Sampling.exactSplit(docs))
       .orderBy(col("source"), col("split")).collect().map(_.toSeq)
     assert(a.toSeq == b.toSeq)
   }

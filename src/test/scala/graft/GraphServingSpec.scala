@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.operators.Graph
+import graft.operators.{Graph, Scale}
 
 /** VERDICT r12 item 4: the graph family over the build-once persisted
   * edge projections — results identical to the inline queries (so they
@@ -32,10 +32,10 @@ class GraphServingSpec extends SparkSpecBase {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val ref = ranks(Graph.pageRank(plain))
     assert(ref.nonEmpty)
-    assert(ranks(Graph.pageRankBucketed(edges,
-      broadcastShare = Some(true))) == ref, "broadcast-share mode drifted")
-    assert(ranks(Graph.pageRankBucketed(edges,
-      broadcastShare = Some(false))) == ref, "shuffle-share mode drifted")
+    assert(ranks(Scale.forcingSide(false)(Graph.pageRankBucketed(edges))) == ref,
+      "broadcast-share mode drifted")
+    assert(ranks(Scale.forcingSide(true)(Graph.pageRankBucketed(edges))) == ref,
+      "shuffle-share mode drifted")
   }
 
   test("bucketed pagerank iterations plan with zero exchange on the edge side") {

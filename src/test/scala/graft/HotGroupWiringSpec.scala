@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Pairs, Serving, Sweep}
+import graft.operators.{Curation, Pairs, Scale, Serving, Sweep}
 
 /** The r15 hot-group wiring sweep: every data-sized window on a
   * handful-valued key must either ride the size-aware Scale dial
@@ -13,9 +13,9 @@ class HotGroupWiringSpec extends SparkSpecBase {
 
   test("peak concurrency: grouped prefix-sum path ≡ window path") {
     val ev = Tables.events(spark, sf)
-    val grouped = Sweep.peakConcurrency(ev, Some(true))
+    val grouped = Scale.forcingSide(true)(Sweep.peakConcurrency(ev))
       .orderBy(col("event_type")).collect().map(_.toSeq)
-    val windowed = Sweep.peakConcurrency(ev, Some(false))
+    val windowed = Scale.forcingSide(false)(Sweep.peakConcurrency(ev))
       .orderBy(col("event_type")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window peak concurrency diverge")
@@ -23,9 +23,9 @@ class HotGroupWiringSpec extends SparkSpecBase {
 
   test("interleave sources: grouped prefix-sum path ≡ window path") {
     val docs = Tables.documents(spark, sf)
-    val grouped = Pairs.interleaveSources(docs, Some(true))
+    val grouped = Scale.forcingSide(true)(Pairs.interleaveSources(docs))
       .orderBy(col("doc_id")).collect().map(_.toSeq)
-    val windowed = Pairs.interleaveSources(docs, Some(false))
+    val windowed = Scale.forcingSide(false)(Pairs.interleaveSources(docs))
       .orderBy(col("doc_id")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window interleave diverge")
@@ -34,10 +34,10 @@ class HotGroupWiringSpec extends SparkSpecBase {
   test("source mix: grouped prefix-sum path ≡ window path") {
     val docs = Tables.documents(spark, sf)
     val shares = Map("src0" -> 4000, "src1" -> 4000, "src2" -> 2000)
-    val grouped = Curation.sourceMix(docs, shares, Some(true))
+    val grouped = Scale.forcingSide(true)(Curation.sourceMix(docs, shares))
       .select(col("doc_id"), col("source"), col("rank_in_source"))
       .orderBy(col("doc_id")).collect().map(_.toSeq)
-    val windowed = Curation.sourceMix(docs, shares, Some(false))
+    val windowed = Scale.forcingSide(false)(Curation.sourceMix(docs, shares))
       .select(col("doc_id"), col("source"), col("rank_in_source"))
       .orderBy(col("doc_id")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
@@ -47,11 +47,11 @@ class HotGroupWiringSpec extends SparkSpecBase {
   test("source mix tokens: grouped prefix-sum path ≡ window path") {
     val docs = Tables.documents(spark, sf)
     val shares = Map("src3" -> 5000, "src4" -> 3000, "src5" -> 2000)
-    val grouped = Curation.sourceMixTokens(docs, shares, Some(true))
+    val grouped = Scale.forcingSide(true)(Curation.sourceMixTokens(docs, shares))
       .select(col("doc_id"), col("source"), col("token_count"),
         col("start_tok"), col("source_token_cap"))
       .orderBy(col("doc_id")).collect().map(_.toSeq)
-    val windowed = Curation.sourceMixTokens(docs, shares, Some(false))
+    val windowed = Scale.forcingSide(false)(Curation.sourceMixTokens(docs, shares))
       .select(col("doc_id"), col("source"), col("token_count"),
         col("start_tok"), col("source_token_cap"))
       .orderBy(col("doc_id")).collect().map(_.toSeq)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Mining
+import graft.operators.{Mining, Scale}
 
 /** Boxplot and association-rule semantics on hand-built data. */
 class MiningSpec extends SparkSpecBase {
@@ -40,9 +40,9 @@ class MiningSpec extends SparkSpecBase {
 
   test("boxplot grouped-rank path is result-identical to the window path") {
     val ev = Tables.events(spark, sf)
-    val grouped = Mining.boxplot(ev, Some(true))
+    val grouped = Scale.forcingSide(true)(Mining.boxplot(ev))
       .orderBy(col("event_type")).collect().map(_.toSeq)
-    val windowed = Mining.boxplot(ev, Some(false))
+    val windowed = Scale.forcingSide(false)(Mining.boxplot(ev))
       .orderBy(col("event_type")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window boxplot diverge")

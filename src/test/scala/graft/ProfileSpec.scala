@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Profile
+import graft.operators.{Profile, Scale}
 
 class ProfileSpec extends SparkSpecBase {
   import spark.implicits._
@@ -57,9 +57,9 @@ class ProfileSpec extends SparkSpecBase {
 
   test("ship latency: grouped prefix-sum path is result-identical to the window path") {
     val (li, ord) = (Tables.lineitem(spark, sf), Tables.orders(spark, sf))
-    val grouped = Profile.shipLatency(li, ord, Some(true))
+    val grouped = Scale.forcingSide(true)(Profile.shipLatency(li, ord))
       .orderBy(col("o_orderpriority")).collect().map(_.toSeq)
-    val windowed = Profile.shipLatency(li, ord, Some(false))
+    val windowed = Scale.forcingSide(false)(Profile.shipLatency(li, ord))
       .orderBy(col("o_orderpriority")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window ship latency diverge")
@@ -67,9 +67,9 @@ class ProfileSpec extends SparkSpecBase {
 
   test("equi-depth: grouped prefix-sum path is result-identical to the window path") {
     val ev = Tables.events(spark, sf)
-    val grouped = Profile.equiDepth(ev, hotGroupsOverride = Some(true))
+    val grouped = Scale.forcingSide(true)(Profile.equiDepth(ev))
       .orderBy(col("event_type"), col("bucket")).collect().map(_.toSeq)
-    val windowed = Profile.equiDepth(ev, hotGroupsOverride = Some(false))
+    val windowed = Scale.forcingSide(false)(Profile.equiDepth(ev))
       .orderBy(col("event_type"), col("bucket")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window equi-depth diverge")
@@ -81,17 +81,17 @@ class ProfileSpec extends SparkSpecBase {
     // scan, so the physical plan must contain no Window operator at all
     // (a Window partitioned by the ~5-value event_type would be the
     // handful-of-giant-tasks scale-killer)
-    val hotPlan = Profile.equiDepth(ev, hotGroupsOverride = Some(true))
+    val hotPlan = Scale.forcingSide(true)(Profile.equiDepth(ev))
       .queryExecution.executedPlan.toString
     assert(!hotPlan.contains("Window"),
       s"grouped mode still plans a Window:\n$hotPlan")
-    val hotShip = Profile.shipLatency(
-        Tables.lineitem(spark, sf), Tables.orders(spark, sf), Some(true))
+    val hotShip = Scale.forcingSide(true)(Profile.shipLatency(
+        Tables.lineitem(spark, sf), Tables.orders(spark, sf)))
       .queryExecution.executedPlan.toString
     assert(!hotShip.contains("Window"),
       s"grouped ship latency still plans a Window:\n$hotShip")
     // non-vacuous control: the plain path DOES plan the per-key window
-    val coldPlan = Profile.equiDepth(ev, hotGroupsOverride = Some(false))
+    val coldPlan = Scale.forcingSide(false)(Profile.equiDepth(ev))
       .queryExecution.executedPlan.toString
     assert(coldPlan.contains("Window"), "control: cold path should window")
   }

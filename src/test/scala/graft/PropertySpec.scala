@@ -85,18 +85,6 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
-  test("config defaults mirror the reference values; overrides parse") {
-    val c = GraftConfig.default
-    assert(c.valueMin == -100.0 && c.valueMax == 60.0)
-    assert(c.consumerBatchSize == 100 && c.jdbcBatchSize == 1000)
-    assert(c.retentionGoldDays == 365)
-    val p = new java.util.Properties()
-    p.setProperty("quality.value.max", "80")
-    p.setProperty("dedup.keys", "a, b")
-    val o = GraftConfig.fromProperties(p)
-    assert(o.valueMax == 80.0 && o.dedupKeys == Seq("a", "b") && o.valueMin == -100.0)
-  }
-
   test("binned range join equals the naive theta-join on generated timestamps (property)") {
     // seconds resolution near bin edges; ids unique per generated set
     val tsGen = Gen.choose(0L, 4L * 1800L).map(s =>

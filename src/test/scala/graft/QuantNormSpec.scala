@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.QuantNorm
+import graft.operators.{QuantNorm, Scale}
 
 class QuantNormSpec extends SparkSpecBase {
   import spark.implicits._
@@ -24,9 +24,9 @@ class QuantNormSpec extends SparkSpecBase {
 
   test("grouped-rank path is result-identical to the window path") {
     val docs = Tables.documents(spark, sf)
-    val grouped = QuantNorm.quantileNormalize(docs, Some(true))
+    val grouped = Scale.forcingSide(true)(QuantNorm.quantileNormalize(docs))
       .orderBy(col("doc_id")).collect().map(_.toSeq)
-    val windowed = QuantNorm.quantileNormalize(docs, Some(false))
+    val windowed = Scale.forcingSide(false)(QuantNorm.quantileNormalize(docs))
       .orderBy(col("doc_id")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window quantile normalization diverge")
@@ -66,9 +66,9 @@ class QuantNormSpec extends SparkSpecBase {
 
   test("winsorize: grouped prefix-sum path ≡ window path; bounds contain the middle") {
     val ev = Tables.events(spark, sf)
-    val grouped = QuantNorm.winsorize(ev, Some(true))
+    val grouped = Scale.forcingSide(true)(QuantNorm.winsorize(ev))
       .orderBy(col("event_id")).collect().map(_.toSeq)
-    val windowed = QuantNorm.winsorize(ev, Some(false))
+    val windowed = Scale.forcingSide(false)(QuantNorm.winsorize(ev))
       .orderBy(col("event_id")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window winsorize diverge")

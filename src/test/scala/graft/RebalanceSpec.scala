@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ivf, Rebalance}
+import graft.operators.{Ivf, Rebalance, Scale}
 
 /** Temperature mixing + cluster-balanced selection: quota math,
   * flattening, and grouped-prefix-sum/window path equivalence. */
@@ -33,7 +33,7 @@ class RebalanceSpec extends SparkSpecBase {
       assert(got.getOrElse(lang, 0L) == quota, s"$lang quota mismatch")
     }
     def rows(hot: Boolean) =
-      Rebalance.sourceMixTemperature(docs, "lang", 250L, Some(hot))
+      Scale.forcingSide(hot)(Rebalance.sourceMixTemperature(docs, "lang", 250L))
         .orderBy("doc_id").collect().toSeq
     assert(rows(hot = true) == rows(hot = false),
       "grouped prefix-sum path must match the window path")
@@ -57,7 +57,8 @@ class RebalanceSpec extends SparkSpecBase {
         assert(selected >= quota, s"$lang under-selected")
     }
     def rows(hot: Boolean) =
-      Rebalance.sourceMixTemperatureTokens(docs, "lang", 15000L, Some(hot))
+      Scale.forcingSide(hot)(
+          Rebalance.sourceMixTemperatureTokens(docs, "lang", 15000L))
         .orderBy("doc_id").collect().toSeq
     assert(rows(hot = true) == rows(hot = false),
       "grouped prefix-sum path must match the window path")
@@ -78,7 +79,7 @@ class RebalanceSpec extends SparkSpecBase {
       assert(kept(cell) == math.min(size, 20L), s"cell $cell")
     }
     def rows(hot: Boolean) =
-      Rebalance.clusterBalance(emb, cents, 20L, Some(hot))
+      Scale.forcingSide(hot)(Rebalance.clusterBalance(emb, cents, 20L))
         .orderBy("vec_id").collect().toSeq
     assert(rows(hot = true) == rows(hot = false),
       "grouped prefix-sum path must match the window path")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Robust
+import graft.operators.{Robust, Scale}
 
 class RobustSpec extends SparkSpecBase {
   import spark.implicits._
@@ -39,14 +39,14 @@ class RobustSpec extends SparkSpecBase {
 
   test("fixture: per-flag results bounded and forced-switch identical") {
     val l = Tables.lineitem(spark, sf)
-    val a = Robust.madByFlag(l, Some(true)).orderBy(col("l_returnflag"))
+    val a = Scale.forcingSide(true)(Robust.madByFlag(l)).orderBy(col("l_returnflag"))
       .collect().map(_.toSeq)
-    val b = Robust.madByFlag(l, Some(false)).orderBy(col("l_returnflag"))
+    val b = Scale.forcingSide(false)(Robust.madByFlag(l)).orderBy(col("l_returnflag"))
       .collect().map(_.toSeq)
     assert(a.toSeq == b.toSeq)
-    val t1 = Robust.trimmedMean(l, Some(true)).orderBy(col("l_returnflag"))
+    val t1 = Scale.forcingSide(true)(Robust.trimmedMean(l)).orderBy(col("l_returnflag"))
       .collect().map(_.toSeq)
-    val t2 = Robust.trimmedMean(l, Some(false)).orderBy(col("l_returnflag"))
+    val t2 = Scale.forcingSide(false)(Robust.trimmedMean(l)).orderBy(col("l_returnflag"))
       .collect().map(_.toSeq)
     assert(t1.toSeq == t2.toSeq)
     // trimmed mean sits inside the untrimmed range; MAD non-negative

@@ -32,6 +32,26 @@ class ScaleSpec extends SparkSpecBase {
     assert(full.exceptAll(plain).isEmpty && plain.exceptAll(full).isEmpty)
   }
 
+  test("forcingSide: restored after a throw and a nested scope; unscoped dials measure") {
+    val small = Seq(("a", 1L), ("b", 2L)).toDF("g", "v")
+    // outside any scope the dial measures: a two-row frame is not hot
+    assert(Scale.forced.isEmpty)
+    assert(!Scale.hotGroups(small, Seq("g")))
+    Scale.forcingSide(true) {
+      assert(Scale.hotGroups(small, Seq("g")))
+      Scale.forcingSide(false)(assert(!Scale.hotGroups(small, Seq("g"))))
+      // the nested scope ended: the outer side is back
+      assert(Scale.forced.contains(true))
+      assert(Scale.hotGroups(small, Seq("g")))
+    }
+    // a body that throws leaves no side behind
+    intercept[IllegalStateException] {
+      Scale.forcingSide(true)(throw new IllegalStateException("boom"))
+    }
+    assert(Scale.forced.isEmpty)
+    assert(!Scale.hotGroups(small, Seq("g")))
+  }
+
   test("grouped running sum / rank equal the per-group window exactly, any nPartitions") {
     import org.apache.spark.sql.expressions.Window
     // 3 hot groups × 2000 rows — the agg_weighted_median shape

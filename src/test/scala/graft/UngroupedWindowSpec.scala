@@ -55,9 +55,9 @@ class UngroupedWindowSpec extends SparkSpecBase {
 
   test("rfm: forced distributed path ≡ forced window path") {
     val orders = Tables.orders(spark, sf)
-    val hot = Rfm.rfm(orders, Some(true))
+    val hot = Scale.forcingSide(true)(Rfm.rfm(orders))
       .orderBy(col("o_custkey")).collect().map(_.toSeq)
-    val cold = Rfm.rfm(orders, Some(false))
+    val cold = Scale.forcingSide(false)(Rfm.rfm(orders))
       .orderBy(col("o_custkey")).collect().map(_.toSeq)
     assert(hot.toSeq == cold.toSeq, "forced rfm paths diverge")
     assert(hot.nonEmpty)
@@ -65,9 +65,9 @@ class UngroupedWindowSpec extends SparkSpecBase {
 
   test("supplier pareto: forced distributed path ≡ forced window path") {
     val li = Tables.lineitem(spark, sf)
-    val hot = Pareto.supplierPareto(li, Some(true))
+    val hot = Scale.forcingSide(true)(Pareto.supplierPareto(li))
       .orderBy(col("rnk")).collect().map(_.toSeq)
-    val cold = Pareto.supplierPareto(li, Some(false))
+    val cold = Scale.forcingSide(false)(Pareto.supplierPareto(li))
       .orderBy(col("rnk")).collect().map(_.toSeq)
     assert(hot.toSeq == cold.toSeq, "forced pareto paths diverge")
     assert(hot.nonEmpty)
@@ -75,9 +75,9 @@ class UngroupedWindowSpec extends SparkSpecBase {
 
   test("user concentration: forced distributed path ≡ forced window path") {
     val ev = Tables.events(spark, sf)
-    val hot = Diagnostics.userConcentration(ev, 1, Some(true))
+    val hot = Scale.forcingSide(true)(Diagnostics.userConcentration(ev, 1))
       .collect().map(_.toSeq)
-    val cold = Diagnostics.userConcentration(ev, 1, Some(false))
+    val cold = Scale.forcingSide(false)(Diagnostics.userConcentration(ev, 1))
       .collect().map(_.toSeq)
     assert(hot.toSeq == cold.toSeq, "forced concentration paths diverge")
     assert(hot.nonEmpty)
@@ -91,14 +91,14 @@ class UngroupedWindowSpec extends SparkSpecBase {
       val ev = Tables.events(spark, sf)
       // positive control: the detector sees the plain form's
       // single-partition sort (three ntile windows → ≥1 site)
-      val coldPlan = Rfm.rfm(orders, Some(false))
+      val coldPlan = Scale.forcingSide(false)(Rfm.rfm(orders))
         .queryExecution.executedPlan.toString
       assert(globalSortExchanges(coldPlan) >= 1,
         s"detector lost the plain global window:\n$coldPlan")
       for ((name, plan) <- Seq(
-        "rfm" -> Rfm.rfm(orders, Some(true)),
-        "pareto" -> Pareto.supplierPareto(li, Some(true)),
-        "concentration" -> Diagnostics.userConcentration(ev, 1, Some(true)))) {
+        "rfm" -> Scale.forcingSide(true)(Rfm.rfm(orders)),
+        "pareto" -> Scale.forcingSide(true)(Pareto.supplierPareto(li)),
+        "concentration" -> Scale.forcingSide(true)(Diagnostics.userConcentration(ev, 1)))) {
         val p = plan.queryExecution.executedPlan.toString
         assert(globalSortExchanges(p) == 0,
           s"$name lifted mode still plans a single-partition sort:\n$p")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Advanced, Dedup, Entity, Features, Graph, Ivf, Joins, Planning, Quant, Temporal, WebText}
+import graft.operators.{Advanced, Dedup, Entity, Features, Graph, Ivf, Joins, Planning, Quant, Scale, Temporal, WebText}
 import graft.sinks.Jsonl
 
 /** Specs for the crawl-front-door, graph, and feature-hashing operators:
@@ -103,9 +103,9 @@ class WebGraphSpec extends SparkSpecBase {
   test("pagerank shuffle-join variant is result-identical to broadcast") {
     val edges = Graph.purchaseEdges(
       Tables.orders(spark, sf), Tables.lineitem(spark, sf)).cache()
-    val bc = Graph.pageRank(edges, broadcastRanks = Some(true))
+    val bc = Scale.forcingSide(false)(Graph.pageRank(edges))
       .orderBy($"node").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val sh = Graph.pageRank(edges, broadcastRanks = Some(false))
+    val sh = Scale.forcingSide(true)(Graph.pageRank(edges))
       .orderBy($"node").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // integer fixed-point arithmetic either way → bit-equal, not close
     assert(bc.sameElements(sh), "broadcast and shuffle pagerank diverge")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.WeightedMedian
+import graft.operators.{Scale, WeightedMedian}
 
 class WeightedMedianSpec extends SparkSpecBase {
   import spark.implicits._
@@ -38,9 +38,9 @@ class WeightedMedianSpec extends SparkSpecBase {
 
   test("grouped prefix-sum path is result-identical to the window path") {
     val li = Tables.lineitem(spark, sf)
-    val grouped = WeightedMedian.weightedQuartiles(li, Some(true))
+    val grouped = Scale.forcingSide(true)(WeightedMedian.weightedQuartiles(li))
       .orderBy(col("l_returnflag")).collect().map(_.toSeq)
-    val windowed = WeightedMedian.weightedQuartiles(li, Some(false))
+    val windowed = Scale.forcingSide(false)(WeightedMedian.weightedQuartiles(li))
       .orderBy(col("l_returnflag")).collect().map(_.toSeq)
     assert(grouped.toSeq == windowed.toSeq,
       "forced grouped vs window weighted quartiles diverge")
