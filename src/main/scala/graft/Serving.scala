@@ -45,14 +45,6 @@ object Serving {
     finally s.close()
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally s.close()
-    }
-
   private def freshnessOf(path: String): Long = {
     val marker = Paths.get(path, "_SOURCE_MTIME")
     if (Files.exists(marker))
@@ -63,13 +55,15 @@ object Serving {
   /** Return the artifact path for (`kind`, `dir`), running `build(path)`
     * first iff the artifact is missing or older than the newest source
     * file. `build` must write the artifact at the given path (overwrite
-    * mode); it actually receives a STAGING path which is atomically
-    * renamed over the final one only after it returns, so readers in any
-    * process see either the old complete artifact or the new complete
-    * artifact, never a half-written directory. Builders across JVMs
-    * (e.g. Bench and Verify on the same dataset) are serialized by an OS
-    * file lock on `<path>.lock` — the JVM-local monitor alone guards
-    * only same-process races (ADVICE r9). */
+    * mode); it actually receives a STAGING path, and [[Swap.replaceDir]]
+    * swaps the staged tree in by rename-aside only after it returns, so
+    * readers in any process see either the old complete artifact or the
+    * new complete artifact, never a half-written directory. A failed
+    * build leaves the old artifact in place; a crash mid-swap leaves the
+    * artifact missing, which the freshness check rebuilds. Builders
+    * across JVMs (e.g. Bench and Verify on the same dataset) are
+    * serialized by an OS file lock on `<path>.lock` — the JVM-local
+    * monitor alone guards only same-process races (ADVICE r9). */
   def buildOnce(kind: String, dir: String)(build: String => Unit): String = {
     val path = artifactPath(kind, dir)
     val lock = locks.computeIfAbsent(path, _ => new Object)
@@ -86,33 +80,12 @@ object Serving {
           try {
             // re-check under the lock: the other process may have built
             if (freshnessOf(path) < srcMtime || freshnessOf(path) == -2L) {
-              val tmp = Paths.get(path + ".build")
-              deleteRecursively(tmp)
-              build(tmp.toString)
-              Files.createDirectories(tmp)
-              Files.writeString(tmp.resolve("_SOURCE_MTIME"),
-                srcMtime.toString): Path
-              // swap via rename-aside, NOT delete-then-move: a recursive
-              // delete of the old artifact walks every file, leaving a
-              // long window where a reader that already passed the
-              // freshness check finds the path absent/half-deleted
-              // (ADVICE r10). Two renames shrink that window to
-              // microseconds; the stale tree is deleted only after the
-              // new one is in place.
-              def mv(from: Path, to: Path): Unit =
-                try Files.move(from, to,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                catch {
-                  case _: java.nio.file.AtomicMoveNotSupportedException =>
-                    Files.move(from, to): Path
-                    ()
-                }
-              val finalP = Paths.get(path)
-              val oldP = Paths.get(path + ".old")
-              deleteRecursively(oldP)
-              if (Files.exists(finalP)) mv(finalP, oldP)
-              mv(tmp, finalP)
-              deleteRecursively(oldP)
+              Swap.replaceDir(Paths.get(path)) { staging =>
+                build(staging.toString)
+                Files.createDirectories(staging)
+                Files.writeString(staging.resolve("_SOURCE_MTIME"),
+                  srcMtime.toString): Path
+              }
             }
           } finally fl.release()
         } finally ch.close()

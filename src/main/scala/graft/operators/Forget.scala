@@ -2,11 +2,11 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Swap, Tables}
 
 /** Key erasure over a partitioned parquet layout — the "right to be
   * forgotten" operation a data platform must run routinely: given a set
@@ -23,10 +23,12 @@ import graft.Tables
   *    again, never rewritten, and stay byte-identical (spec-pinned) —
   *    at 100 TB with date-partitioned data a deletion request touches
   *    the handful of partitions the subject appears in.
-  * 3. The swap is rename-aside (stage → old aside → staging in → drop
-  *    old; the [[graft.Serving.buildOnce]] discipline), so a concurrent
-  *    reader sees the old complete tree or the new complete tree, never
-  *    a half-rewritten directory.
+  * 3. The swap is [[graft.Swap]]'s rename-aside replace (stage → old
+  *    aside → staging in → drop old), the one protocol serving builds
+  *    and the CDC pointer share, so a concurrent reader sees the old
+  *    complete tree or the new complete tree, never a half-rewritten
+  *    directory; every sweep first runs [[graft.Swap.recover]] on its
+  *    root, finishing or undoing a swap a crash interrupted.
   * Re-running with the same keys finds zero affected partitions —
   * idempotent by construction. Returns the per-partition audit (rows
   * removed / kept) the erasure request needs for its compliance record.
@@ -73,12 +75,75 @@ object Forget {
   private def settledKeys(keysDf: DataFrame, keyCol: String): DataFrame =
     Dedup.materialized(keysDf.select(col(keyCol)).distinct())
 
-  /** Convenience form for small subject lists. */
+  /** The ONE detection scan every rewrite sweep starts with: per unit —
+    * a partition (`unitCols` = the partition columns) or a file
+    * (`unitCols` = a column holding `input_file_name()`) — the subject
+    * rows to remove and the unit's total rows, collected (control-plane
+    * only, ≤ #units rows). Both numbers come from this scan, so no
+    * rewrite path needs a per-unit read-back count afterwards. */
+  private def detect(rows: DataFrame, keys: DataFrame, keyCol: String,
+      unitCols: Seq[String]): Detection =
+    Detection(rows
+      .join(keys.withColumn("_graft_hit", lit(1L)), Seq(keyCol), "left")
+      .groupBy(unitCols.map(col): _*)
+      .agg(sum(coalesce(col("_graft_hit"), lit(0L))).as("rows_removed"),
+        count(lit(1)).as("rows_total"))
+      .collect(), unitCols.size)
+
+  /** [[detect]]'s per-unit rows: the unit columns, then rows_removed and
+    * rows_total. */
+  private final case class Detection(units: Array[Row], width: Int) {
+    def removed(u: Row): Long = u.getLong(width)
+    def kept(u: Row): Long = u.getLong(width + 1) - removed(u)
+    val affected: Array[Row] = units.filter(removed(_) > 0L)
+    /** Subjects touch a strict majority of units: per-unit surgery would
+      * degenerate into #units SERIAL mini-jobs, while ONE parallel
+      * rewrite of the whole layout with a rename-aside root swap costs a
+      * single pass. Rewrite granularity follows subject CLUSTERING —
+      * above half the units there is nothing left to prune, at 100 TB
+      * too. */
+    def majority: Boolean = affected.length * 2 > units.length
+    /** (audit frame ordered by unit, rows_total_before, rows_removed) —
+      * `audit` names each rewritten unit and carries its detection row. */
+    def report(spark: SparkSession, unit: String,
+        audit: Seq[(String, Row)]): (DataFrame, Long, Long) = {
+      import spark.implicits._
+      (audit.map { case (name, u) => (name, removed(u), kept(u)) }
+        .toDF(unit, "rows_removed", "rows_kept").orderBy(col(unit)),
+        units.map(_.getLong(width + 1)).sum, affected.map(removed).sum)
+    }
+  }
+
+  private def fileOf(uri: String): Path =
+    if (uri.contains(":/")) Paths.get(java.net.URI.create(uri))
+    else Paths.get(uri)
+
+  /** Rewrite one file of a flat layout: `write` puts the unit's kept
+    * rows, coalesced to one file, at the staging path it is given, and
+    * that write's part file ending in `ext` replaces `file` in one
+    * rename ([[Swap.replaceFile]]) — one file stays one file. Even an
+    * all-rows-removed file is replaced by its (schema-bearing) empty
+    * successor, keeping the directory readable and the file set stable
+    * for concurrent listings. */
+  private def rewriteFile(file: Path, ext: String)(write: String => Unit): Unit =
+    Swap.replaceFile(file) { staging =>
+      write(staging.toString)
+      val s = Files.list(staging)
+      try s.filter { p =>
+          val n = p.getFileName.toString
+          n.startsWith("part-") && n.endsWith(ext)
+        }.findFirst().orElseThrow()
+      finally s.close()
+    }
+
+  /** Convenience form of [[forgetKeysTableTotals]] for small subject
+    * lists; returns the audit frame. */
   def forgetKeys(spark: SparkSession, path: String,
       partitionCols: Seq[String], keyCol: String,
       keys: Seq[Long]): DataFrame = {
     import spark.implicits._
-    forgetKeysTable(spark, path, partitionCols, keyCol, keys.toDF(keyCol))
+    forgetKeysTableTotals(spark, path, partitionCols, keyCol,
+      keys.toDF(keyCol))._1
   }
 
   /** Erase every row whose `keyCol` appears in `keysDf` from the layout
@@ -87,42 +152,23 @@ object Forget {
     * which joins (semi for detection, anti for the rewrite) handle at
     * any size while an IN-literal plan would not. `keyCol` must be a
     * DATA column (not a partition column — erasing a whole partition
-    * value is a directory delete, not a rewrite). Returns the audit
-    * frame (partition, rows_removed, rows_kept). */
-  def forgetKeysTable(spark: SparkSession, path: String,
-      partitionCols: Seq[String], keyCol: String,
-      keysDf: DataFrame): DataFrame = {
-    import spark.implicits._
-    forgetKeysTableTotals(spark, path, partitionCols, keyCol, keysDf)._1
-  }
-
-  /** [[forgetKeysTable]] plus the pre-sweep grand totals the compliance
-    * report needs: (audit, rows_total_before, rows_removed_total). The
-    * totals come from the SAME single detection scan — no post-sweep
-    * read-back, which both saves a full count pass per artifact and
-    * avoids the empty-layout trap (ADVICE r12: a total erasure leaves a
-    * staging tree with no schema-bearing files, and a read-back would
-    * throw 'unable to infer schema' exactly in the all-rows-removed
-    * case). */
+    * value is a directory delete, not a rewrite). Returns (audit frame
+    * (partition, rows_removed, rows_kept), rows_total_before,
+    * rows_removed_total). The totals come from the SAME single
+    * detection scan — no post-sweep read-back, which both saves a full
+    * count pass per artifact and avoids the empty-layout trap (ADVICE
+    * r12: a total erasure leaves a staging tree with no schema-bearing
+    * files, and a read-back would throw 'unable to infer schema'
+    * exactly in the all-rows-removed case). */
   def forgetKeysTableTotals(spark: SparkSession, path: String,
       partitionCols: Seq[String], keyCol: String,
       keysDf: DataFrame): (DataFrame, Long, Long) = {
-    import spark.implicits._
     require(!partitionCols.contains(keyCol),
       s"$keyCol is a partition column — erase it by dropping directories")
-    recoverSwaps(Paths.get(path))
+    Swap.recover(Paths.get(path))
     val keys = settledKeys(keysDf, keyCol)
     val layout = spark.read.option("basePath", path).parquet(path)
-    // ONE scan yields removed AND total per partition, so neither
-    // rewrite path needs a per-partition read-back count afterwards
-    val perPart = layout
-      .join(keys.withColumn("_graft_hit", lit(1L)), Seq(keyCol), "left")
-      .groupBy(partitionCols.map(col): _*)
-      .agg(sum(coalesce(col("_graft_hit"), lit(0L))).as("rows_removed"),
-        count(lit(1)).as("rows_total"))
-      .collect()
-    val nCols = partitionCols.size
-    val affected = perPart.filter(_.getLong(nCols) > 0L)
+    val d = detect(layout, keys, keyCol, partitionCols)
     // directory names via Spark's own partition-path rules — raw
     // interpolation resolves a value containing ' ', '/', ':', '='
     // (or a null, written as __HIVE_DEFAULT_PARTITION__) to a wrong or
@@ -131,39 +177,23 @@ object Forget {
     // (int/long/string partition columns — the layouts this sweep
     // serves); getPartitionPathString maps null/empty to the Hive
     // default partition exactly as the writer did.
-    def segsOf(row: org.apache.spark.sql.Row): Seq[String] =
+    def segsOf(row: Row): Seq[String] =
       partitionCols.zipWithIndex.map { case (c, i) =>
         val v = row.get(i)
         ExternalCatalogUtils.getPartitionPathString(c,
           if (v == null) null else v.toString)
       }
-    val audit: Seq[(String, Long, Long)] =
-      if (affected.isEmpty) Nil
-      else if (affected.length * 2 > perPart.length) {
-        // subjects touch a strict majority of partitions — per-partition
-        // surgery would degenerate into #partitions SERIAL mini-jobs,
-        // while ONE parallel anti-join rewrite of the whole table with a
-        // rename-aside root swap costs a single pass. Rewrite
-        // granularity follows subject CLUSTERING: above half the
-        // partitions there is nothing left to prune.
-        val dir = Paths.get(path)
-        val staging = dir.resolveSibling(
-          "." + dir.getFileName.toString + ".forget_staging")
-        val old = dir.resolveSibling(
-          "." + dir.getFileName.toString + ".forget_old")
+    val audit: Seq[(String, Row)] =
+      if (d.affected.isEmpty) Nil
+      else if (d.majority) {
         val kept = layout.join(keys, Seq(keyCol), "left_anti")
           .select(layout.columns.map(col).toIndexedSeq: _*)
-        deleteRecursively(staging)
-        kept.write.mode("overwrite").partitionBy(partitionCols: _*)
-          .parquet(staging.toString)
-        deleteRecursively(old)
-        mv(dir, old)
-        mv(staging, dir)
-        deleteRecursively(old)
-        affected.map(row => (segsOf(row).mkString("/"),
-          row.getLong(nCols), row.getLong(nCols + 1) - row.getLong(nCols)))
-          .toSeq
-      } else inParallel(affected.toSeq) { row =>
+        Swap.replaceDir(Paths.get(path)) { staging =>
+          kept.write.mode("overwrite").partitionBy(partitionCols: _*)
+            .parquet(staging.toString)
+        }
+        d.affected.toSeq.map(row => (segsOf(row).mkString("/"), row))
+      } else inParallel(d.affected.toSeq) { row =>
         val segs = segsOf(row)
         val dir = Paths.get(path, segs: _*)
         val part = spark.read.parquet(dir.toString)
@@ -172,51 +202,31 @@ object Forget {
           // partition files' original column order so appended readers
           // and schema checks see one layout
           .select(part.columns.map(col).toIndexedSeq: _*)
-        // dot-prefixed siblings: Spark's file listing skips paths whose
-        // name starts with '.' or '_', so a concurrent reader of the
-        // table ROOT never lists the staging/old trees even transiently
-        // (ADVICE r11; the leaf-level swap itself is already
-        // rename-aside)
-        val staging = dir.resolveSibling(
-          "." + dir.getFileName.toString + ".forget_staging")
-        val old = dir.resolveSibling(
-          "." + dir.getFileName.toString + ".forget_old")
-        deleteRecursively(staging)
-        kept.write.mode("overwrite").parquet(staging.toString)
-        deleteRecursively(old)
-        mv(dir, old)
-        mv(staging, dir)
-        deleteRecursively(old)
-        (segs.mkString("/"), row.getLong(nCols),
-          row.getLong(nCols + 1) - row.getLong(nCols))
-      }.toSeq
-    (audit.toDF("partition", "rows_removed", "rows_kept")
-      .orderBy(col("partition")),
-      perPart.map(_.getLong(nCols + 1)).sum,
-      affected.map(_.getLong(nCols)).sum)
+        // the staging/old siblings are dot-prefixed: Spark's file
+        // listing skips them, so a concurrent reader of the table ROOT
+        // never lists them even transiently (ADVICE r11)
+        Swap.replaceDir(dir) { staging =>
+          kept.write.mode("overwrite").parquet(staging.toString)
+        }
+        (segs.mkString("/"), row)
+      }
+    d.report(spark, "partition", audit)
   }
 
   /** File-pruned erasure for an UNpartitioned parquet layout: one
     * distributed scan tags rows with their source file and finds the
     * files that contain a subject (control-plane collect, ≤ #affected
-    * files); only those files are rewritten through the anti-filter —
-    * every other file is never read again and stays byte-identical.
-    * Each rewrite stages into a dot-prefixed sibling dir (invisible to
-    * Spark's listing) and the swap is one atomic per-file move, so a
-    * concurrent reader sees each file either pre- or post-erasure,
-    * never missing or doubled. The flat-layout complement of
-    * [[forgetKeysTable]] for derived artifacts (postings, code tables,
-    * projections) that are not Hive-partitioned. Returns
-    * (file, rows_removed, rows_kept). */
-  def forgetKeysFiles(spark: SparkSession, path: String, keyCol: String,
-      keysDf: DataFrame): DataFrame = {
-    import spark.implicits._
-    forgetKeysFilesTotals(spark, path, keyCol, keysDf)._1
-  }
-
-  /** [[forgetKeysFiles]] plus pre-sweep grand totals (audit,
-    * rows_total_before, rows_removed_total) from the single detection
-    * scan — the flat-layout counterpart of [[forgetKeysTableTotals]].
+    * files); only those files are rewritten — every other file is never
+    * read again and stays byte-identical. Each rewrite stages into a
+    * dot-prefixed sibling (invisible to Spark's listing) and the swap
+    * is one atomic per-file move, so a concurrent reader sees each file
+    * either pre- or post-erasure, never missing or doubled. The
+    * flat-layout complement of [[forgetKeysTableTotals]] for derived
+    * artifacts (postings, code tables, projections) that are not
+    * Hive-partitioned. Returns (audit frame (file, rows_removed,
+    * rows_kept), rows_total_before, rows_removed_total), all from the
+    * single detection scan.
+    *
     * `rewrite` maps (rows-of-unit, subject-keys) to the unit's
     * post-erasure rows; the default is the plain anti-join, and
     * [[forgetPacked]] passes the in-pack offset-closure transform.
@@ -242,91 +252,34 @@ object Forget {
       wholeWriter: (DataFrame, String, Int) => Unit =
         (df, p, _) => df.write.mode("overwrite").parquet(p))
       : (DataFrame, Long, Long) = {
-    import spark.implicits._
-    recoverSwaps(Paths.get(path))
+    Swap.recover(Paths.get(path))
     val keys = settledKeys(keysDf, keyCol)
     val layout = spark.read.parquet(path)
     val cols = layout.columns.toIndexedSeq
-    // ONE scan yields removed AND kept per file, so neither rewrite path
-    // needs a per-file read-back count afterwards
-    val perFile = layout.withColumn("_graft_file", input_file_name())
-      .join(keys.withColumn("_graft_hit", lit(1L)), Seq(keyCol), "left")
-      .groupBy(col("_graft_file"))
-      .agg(sum(coalesce(col("_graft_hit"), lit(0L))).as("rows_removed"),
-        count(lit(1)).as("rows_total"))
-      .collect()
-    val affected = perFile.filter(_.getLong(1) > 0L)
-    def fileOf(uri: String): Path =
-      if (uri.contains(":/")) Paths.get(java.net.URI.create(uri))
-      else Paths.get(uri)
-    val audit: Seq[(String, Long, Long)] =
-      if (affected.isEmpty) Nil
-      else if (affected.length * 2 > perFile.length) {
-        // subjects touch most files (the term-ordered-postings shape:
-        // a subject's terms scatter across every range file) — per-file
-        // surgery would degenerate into #files SERIAL mini-jobs, while
-        // ONE parallel anti-join rewrite of the whole layout with a
-        // rename-aside dir swap costs a single pass. This is the right
-        // plan at 100 TB too: rewrite granularity should follow subject
-        // CLUSTERING, and above ~half the files there is nothing left
-        // to prune.
-        val dir = Paths.get(path)
-        val staging = dir.resolveSibling(
-          "." + dir.getFileName.toString + ".forget_staging")
-        val old = dir.resolveSibling(
-          "." + dir.getFileName.toString + ".forget_old")
-        val kept = rewrite(layout, keys, keyCol)
-          .select(cols.map(col): _*)
-        deleteRecursively(staging)
-        wholeWriter(kept, staging.toString, perFile.length)
-        deleteRecursively(old)
-        mv(dir, old)
-        mv(staging, dir)
-        deleteRecursively(old)
-        affected.map(r => (fileOf(r.getString(0)).getFileName.toString,
-          r.getLong(1), r.getLong(2) - r.getLong(1))).toSeq
-      } else inParallel(affected.toSeq) { row =>
+    val d = detect(layout.withColumn("_graft_file", input_file_name()),
+      keys, keyCol, Seq("_graft_file"))
+    def nameOf(row: Row): String =
+      fileOf(row.getString(0)).getFileName.toString
+    val audit: Seq[(String, Row)] =
+      if (d.affected.isEmpty) Nil
+      else if (d.majority) {
+        // the term-ordered-postings shape: a subject's terms scatter
+        // across every range file
+        val kept = rewrite(layout, keys, keyCol).select(cols.map(col): _*)
+        Swap.replaceDir(Paths.get(path)) { staging =>
+          wholeWriter(kept, staging.toString, d.units.length)
+        }
+        d.affected.toSeq.map(row => (nameOf(row), row))
+      } else inParallel(d.affected.toSeq) { row =>
         val file = fileOf(row.getString(0))
         val part = spark.read.parquet(file.toString)
-        val kept = rewrite(part, keys, keyCol)
-          .select(cols.map(col): _*)
-        val staging = file.resolveSibling(
-          "." + file.getFileName.toString + ".forget_staging")
-        deleteRecursively(staging)
-        // one file stays one file (coalesce(1)): surgical rewrites must
-        // not change the layout's file granularity, only its contents
-        kept.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val partFile = {
-          val s = Files.list(staging)
-          try s.filter(p => p.getFileName.toString.startsWith("part-")
-              && p.getFileName.toString.endsWith(".parquet"))
-            .findFirst().orElseThrow()
-          finally s.close()
+        val kept = rewrite(part, keys, keyCol).select(cols.map(col): _*)
+        rewriteFile(file, ".parquet") { staging =>
+          kept.coalesce(1).write.mode("overwrite").parquet(staging)
         }
-        // atomic per-file swap: even an all-rows-removed file is
-        // replaced by its (schema-bearing) empty successor, keeping the
-        // directory readable and the file set stable for concurrent
-        // listings. Checksum sidecars must follow the content: Hadoop's
-        // local FS keeps a .<name>.crc per file, and leaving the OLD one
-        // beside the NEW content fails every subsequent read with
-        // ChecksumException — drop the stale sidecar first (reads skip
-        // verification while absent), install the new content, then its
-        // matching sidecar.
-        val stagedCrc = staging.resolve(
-          "." + partFile.getFileName.toString + ".crc")
-        val targetCrc = file.resolveSibling(
-          "." + file.getFileName.toString + ".crc")
-        Files.deleteIfExists(targetCrc)
-        mv(partFile, file)
-        if (Files.exists(stagedCrc)) mv(stagedCrc, targetCrc)
-        deleteRecursively(staging)
-        (file.getFileName.toString, row.getLong(1),
-          row.getLong(2) - row.getLong(1))
-      }.toSeq
-    (audit.toDF("file", "rows_removed", "rows_kept")
-      .orderBy(col("file")),
-      perFile.map(_.getLong(2)).sum,
-      affected.map(_.getLong(1)).sum)
+        (nameOf(row), row)
+      }
+    d.report(spark, "file", audit)
   }
 
   // ----------- content-embedding targets (VERDICT r12 items 2 + 7) ----
@@ -402,54 +355,26 @@ object Forget {
   /** [[forgetJsonl]] plus (rows_total_before, rows_removed_total). */
   def forgetJsonlTotals(spark: SparkSession, path: String,
       jsonKeyPath: String, keysDf: DataFrame): (DataFrame, Long, Long) = {
-    import spark.implicits._
-    recoverSwaps(Paths.get(path))
-    val keys = keysDf.select(col(keysDf.columns.head).cast("string")
-      .as("_graft_key")).distinct().localCheckpoint(true)
-    val lines = spark.read.text(path)
-      .withColumn("_graft_key", get_json_object(col("value"), jsonKeyPath))
-    val perFile = lines.withColumn("_graft_file", input_file_name())
-      .join(keys.withColumn("_graft_hit", lit(1L)), Seq("_graft_key"), "left")
-      .groupBy(col("_graft_file"))
-      .agg(sum(coalesce(col("_graft_hit"), lit(0L))).as("rows_removed"),
-        count(lit(1)).as("rows_total"))
-      .collect()
-    val affected = perFile.filter(_.getLong(1) > 0L)
-    def fileOf(uri: String): Path =
-      if (uri.contains(":/")) Paths.get(java.net.URI.create(uri))
-      else Paths.get(uri)
-    val audit: Seq[(String, Long, Long)] = inParallel(affected.toSeq) { row =>
+    Swap.recover(Paths.get(path))
+    val keys = settledKeys(
+      keysDf.select(col(keysDf.columns.head).cast("string").as("_graft_key")),
+      "_graft_key")
+    def keyed(lines: DataFrame): DataFrame =
+      lines.withColumn("_graft_key", get_json_object(col("value"), jsonKeyPath))
+    val d = detect(keyed(spark.read.text(path))
+      .withColumn("_graft_file", input_file_name()),
+      keys, "_graft_key", Seq("_graft_file"))
+    val audit = inParallel(d.affected.toSeq) { row =>
       val file = fileOf(row.getString(0))
-      val kept = spark.read.text(file.toString)
-        .withColumn("_graft_key",
-          get_json_object(col("value"), jsonKeyPath))
+      val kept = keyed(spark.read.text(file.toString))
         .join(keys, Seq("_graft_key"), "left_anti")
         .select(col("value"))
-      val staging = file.resolveSibling(
-        "." + file.getFileName.toString + ".forget_staging")
-      deleteRecursively(staging)
-      kept.coalesce(1).write.mode("overwrite").text(staging.toString)
-      val partFile = {
-        val s = Files.list(staging)
-        try s.filter(p => p.getFileName.toString.startsWith("part-")
-            && p.getFileName.toString.endsWith(".txt"))
-          .findFirst().orElseThrow()
-        finally s.close()
+      rewriteFile(file, ".txt") { staging =>
+        kept.coalesce(1).write.mode("overwrite").text(staging)
       }
-      val stagedCrc = staging.resolve(
-        "." + partFile.getFileName.toString + ".crc")
-      val targetCrc = file.resolveSibling(
-        "." + file.getFileName.toString + ".crc")
-      Files.deleteIfExists(targetCrc)
-      mv(partFile, file)
-      if (Files.exists(stagedCrc)) mv(stagedCrc, targetCrc)
-      deleteRecursively(staging)
-      (file.getFileName.toString, row.getLong(1),
-        row.getLong(2) - row.getLong(1))
-    }.toSeq
-    (audit.toDF("file", "rows_removed", "rows_kept").orderBy(col("file")),
-      perFile.map(_.getLong(2)).sum,
-      affected.map(_.getLong(1)).sum)
+      (file.getFileName.toString, row)
+    }
+    d.report(spark, "file", audit)
   }
 
   /** Subject-keyed batched DELETE against a JDBC Gold table — the
@@ -601,6 +526,9 @@ object Forget {
     // artifact's many small rewrite jobs left the executors idle in
     // every job tail while six more artifacts waited
     val report = inParallel(refs) { ref =>
+      // recover BEFORE the existence check: a crash mid root-swap
+      // leaves the artifact's root renamed aside, not absent for good
+      Swap.recover(Paths.get(ref.path))
       if (!Files.exists(Paths.get(ref.path)))
         (ref.artifact, 0L, 0L, 0L)
       else {
@@ -705,11 +633,10 @@ object Forget {
       // subjects settle ONCE (bounded: ~1% of AuditDocs rows): every
       // sweep's detection scan and rewrite jobs would otherwise re-run
       // this documents scan + filter as part of their keys-distinct
-      val subjects = Tables.documents(spark, dir)
+      val subjects = Dedup.materialized(Tables.documents(spark, dir)
         .filter(col("doc_id") < AuditDocs)
         .filter(col("doc_id") % AuditMod === AuditRes)
-        .select(col("doc_id"))
-        .localCheckpoint(true)
+        .select(col("doc_id")))
       // the three sweep groups touch disjoint trees under tmp — overlap
       // them (guide §2.6) exactly like forgetWithDerived overlaps its
       // per-artifact sweeps internally; the forgetWithDerived report
@@ -740,7 +667,7 @@ object Forget {
       report.select(col("artifact"), col("rows_removed"), col("rows_kept"))
         .unionByName(extra)
         .orderBy(col("artifact"))
-    } finally deleteRecursively(tmp)
+    } finally Swap.deleteTree(tmp)
   }
 
   /** DuckDB twin: each artifact's removed/kept row counts re-derived
@@ -817,10 +744,13 @@ object Forget {
       val subjects = docs.filter(col("doc_id") % AuditMod === AuditRes)
         .select(col("doc_id"))
       forgetPacked(spark, path, subjects)
+      // a raw checkpoint, not Dedup.materialized: it pins the result
+      // before the temporary tree is deleted, so it must not follow
+      // graft.explain.lineage back to files that are about to vanish
       spark.read.parquet(path)
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally deleteRecursively(tmp)
+    } finally Swap.deleteTree(tmp)
   }
 
   /** Twin: the oSeqPack packing CTEs restricted to the fixture, then
@@ -868,71 +798,4 @@ object Forget {
       ()
     } finally s.close()
   }
-
-  /** Crash recovery (ADVICE r12): a rename-aside swap has two windows —
-    * after `mv(dir, old)` but before `mv(staging, dir)` the target is
-    * ABSENT with the complete new tree stranded in `.X.forget_staging`
-    * and the old tree in `.X.forget_old`; after the second rename but
-    * before the old-tree delete, a stale `.X.forget_old` survives. A
-    * naive re-run then fails on the missing path with no recovery. On
-    * entry every sweep scans for leftover swap siblings (of the root,
-    * and of any partition dir / file inside the tree) and resumes:
-    * target missing + staging present → the staging write COMPLETED
-    * (writes strictly precede the first rename), so promote staging
-    * and drop old; target missing + only old → roll back to old;
-    * target present → the leftover is stale, drop it. Idempotent and
-    * safe to run concurrently with readers (only hidden dirs and a
-    * missing target are ever touched). */
-  private def recoverSwaps(root: Path): Unit = {
-    def recoverOne(hidden: Path): Unit = {
-      val name = hidden.getFileName.toString
-      val isStaging = name.endsWith(".forget_staging")
-      val base = name.stripPrefix(".")
-        .stripSuffix(if (isStaging) ".forget_staging" else ".forget_old")
-      val target = hidden.resolveSibling(base)
-      val staging = hidden.resolveSibling("." + base + ".forget_staging")
-      val old = hidden.resolveSibling("." + base + ".forget_old")
-      if (!Files.exists(target)) {
-        if (Files.exists(staging)) {
-          mv(staging, target); deleteRecursively(old)
-        } else if (Files.exists(old)) mv(old, target)
-      } else if (isStaging) deleteRecursively(staging)
-      else deleteRecursively(old)
-    }
-    // the ROOT's own swap dirs live as siblings OF the root — if the
-    // crash hit the root swap, the root itself may be absent
-    val rootName = root.getFileName.toString
-    Seq(s".$rootName.forget_staging", s".$rootName.forget_old").foreach { n =>
-      val h = root.resolveSibling(n)
-      if (Files.exists(h)) recoverOne(h)
-    }
-    if (Files.exists(root)) {
-      val s = Files.walk(root)
-      val leftovers = try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith(".") &&
-            (n.endsWith(".forget_staging") || n.endsWith(".forget_old"))
-        }.toList
-      } finally s.close()
-      leftovers.foreach(h => if (Files.exists(h)) recoverOne(h))
-    }
-  }
-
-  private def mv(from: Path, to: Path): Unit =
-    try Files.move(from, to, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(from, to): Path
-        ()
-    }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => { Files.delete(f); () })
-      finally s.close()
-    }
 }

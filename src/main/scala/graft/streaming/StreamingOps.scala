@@ -260,25 +260,14 @@ object StreamingOps {
 
   /** Atomic LATEST-pointer swap for a versioned state dir (ADVICE r13):
     * a bare truncate-then-write has a crash window that leaves an
-    * empty/torn pointer every reader then fails on. Stage the new
-    * value in a dot-prefixed sibling (invisible to Spark listings) and
-    * rename over LATEST — on POSIX rename(2) replaces atomically, so a
-    * reader resolves either the old or the new version, never a torn
-    * one. */
-  def cdcWritePointer(stateDir: String, version: String): Unit = {
-    val ptr = java.nio.file.Paths.get(stateDir, "LATEST")
-    val tmp = ptr.resolveSibling(".LATEST.swap")
-    java.nio.file.Files.writeString(tmp, version)
-    try java.nio.file.Files.move(tmp, ptr,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        java.nio.file.Files.move(tmp, ptr,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        ()
+    * empty/torn pointer every reader then fails on. The new value is
+    * staged beside LATEST and renamed over it ([[graft.Swap.replaceFile]],
+    * the one crash-safe replace), so a reader resolves either the old or
+    * the new version, never a torn one. */
+  def cdcWritePointer(stateDir: String, version: String): Unit =
+    graft.Swap.replaceFile(java.nio.file.Paths.get(stateDir, "LATEST")) {
+      java.nio.file.Files.writeString(_, version)
     }
-    ()
-  }
 
   /** Read the state table a [[cdcApplyStream]] maintains. */
   def cdcCurrentState(spark: SparkSession, stateDir: String): DataFrame = {
@@ -295,7 +284,9 @@ object StreamingOps {
     * versions are monotone, LATEST is the max), deletes the directories
     * of everything older, returns the dropped version names. Readers of
     * retained versions are untouched; `keep ≥ 2` leaves one rollback
-    * step. Driver-side directory walk — version count, not data size. */
+    * step. Dropped trees go through [[graft.Swap.deleteTree]], the swap
+    * protocol's own delete. Driver-side directory walk — version count,
+    * not data size. */
   def cdcRetainVersions(stateDir: String, keep: Int): Seq[String] = {
     require(keep >= 1, "must keep at least the LATEST version")
     val root = java.nio.file.Paths.get(stateDir)
@@ -307,12 +298,7 @@ object StreamingOps {
         .sortBy(_.getFileName.toString.drop(1).toLong)
       finally s.close()
     val drop = versions.dropRight(keep)
-    drop.foreach { d =>
-      val w = java.nio.file.Files.walk(d)
-      try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => { java.nio.file.Files.delete(f); () })
-      finally w.close()
-    }
+    drop.foreach(graft.Swap.deleteTree)
     drop.map(_.getFileName.toString).toSeq
   }
 

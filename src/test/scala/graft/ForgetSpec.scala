@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.Forget
@@ -144,6 +146,83 @@ class ForgetSpec extends SparkSpecBase {
     assert(!Files.exists(old), "stale forget_old must be dropped")
     assert(spark.read.option("basePath", dir.toString)
       .parquet(dir.toString).count() == 2L)
+  }
+
+  test("forgetWithDerived finishes an artifact's interrupted root swap instead of reporting it unbuilt") {
+    // a crash between the root-swap renames leaves the artifact's root
+    // renamed aside with the complete staged tree beside it: the path is
+    // absent, but the artifact was built and still holds subject rows
+    val art = Files.createTempDirectory("graft-forget-derived-crash")
+      .resolve("art")
+    Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("doc_id", "text")
+      .write.parquet(art.toString)
+    val staging = art.resolveSibling(".art.forget_staging")
+    val old = art.resolveSibling(".art.forget_old")
+    // the crashed sweep had staged the tree with doc 1 erased
+    spark.read.parquet(art.toString).filter($"doc_id" =!= 1L)
+      .write.parquet(staging.toString)
+    Files.move(art, old)
+    val report = Forget.forgetWithDerived(spark,
+      Seq(Forget.DerivedRef("art", art.toString, "doc_id")),
+      Seq(2L).toDF("doc_id")).collect()
+    assert(report.length == 1)
+    assert(report.head.getLong(1) == 1L, s"rows_removed: ${report.head}")
+    assert(report.head.getLong(2) == 1L, s"rows_kept: ${report.head}")
+    assert(spark.read.parquet(art.toString).select($"doc_id").as[Long]
+      .collect().toSeq == Seq(3L))
+    assert(!Files.exists(staging) && !Files.exists(old),
+      "the staged tree must not stay stranded")
+  }
+
+  test("Swap.recover promotes a staged tree once the original was renamed aside, else rolls the original back") {
+    val base = Files.createTempDirectory("graft-swap-recover")
+    def tree(p: java.nio.file.Path, v: String): Unit = {
+      Files.createDirectories(p)
+      Files.writeString(p.resolve("v"), v)
+      ()
+    }
+    // crash after the rename-aside: target absent, old aside, staging
+    // complete (staging strictly precedes the first rename)
+    val t = base.resolve("t")
+    tree(Swap.oldOf(t), "old")
+    tree(Swap.stagingOf(t), "new")
+    Swap.recover(t)
+    assert(Files.readString(t.resolve("v")) == "new")
+    // the same window one level down, found by the walk under the root
+    val inner = t.resolve("part=1")
+    tree(Swap.oldOf(inner), "old")
+    tree(Swap.stagingOf(inner), "new")
+    // crash after the rename-aside but with no staging tree: roll back
+    val u = t.resolve("part=2")
+    tree(Swap.oldOf(u), "old")
+    Swap.recover(t)
+    assert(Files.readString(inner.resolve("v")) == "new")
+    assert(Files.readString(u.resolve("v")) == "old")
+    val s = Files.walk(base)
+    val residue = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".")).toList
+    finally s.close()
+    assert(residue.isEmpty, residue.mkString(";"))
+  }
+
+  test("Swap.recover drops a staged tree whose original was never renamed aside") {
+    val base = Files.createTempDirectory("graft-swap-unpaired")
+    // a crashed first build: staging only, no target, nothing aside
+    val first = base.resolve("first")
+    Files.createDirectories(Swap.stagingOf(first))
+    Files.writeString(Swap.stagingOf(first).resolve("v"), "partial")
+    Swap.recover(first)
+    assert(!Files.exists(first), "a first build's staging must not be promoted")
+    assert(!Files.exists(Swap.stagingOf(first)))
+    // a crashed staging write beside a present file: the file stays
+    val f = base.resolve("tbl").resolve("part-0.parquet")
+    Files.createDirectories(f.getParent)
+    Files.writeString(f, "kept")
+    Files.createDirectories(Swap.stagingOf(f))
+    Files.writeString(Swap.stagingOf(f).resolve("part-0.parquet"), "partial")
+    Swap.recover(base.resolve("tbl"))
+    assert(Files.readString(f) == "kept")
+    assert(!Files.exists(Swap.stagingOf(f)))
   }
 
   test("erasing every row of an artifact reports rows_kept = 0 without a read-back crash") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 /** Pins the serving-artifact registry (graft.Serving): collision-proof
   * path keying on the full dataset dir, build-once semantics, and
   * rebuild when the source data is newer than the artifact (ADVICE r8:
@@ -31,7 +33,11 @@ class ServingCacheSpec extends SparkSpecBase {
     }
     // the callback never writes the final path directly (ADVICE r9:
     // a concurrent process must not observe a half-written artifact)
-    assert(stagedPath != p && stagedPath.startsWith(p))
+    val staged = Paths.get(stagedPath)
+    assert(staged != Paths.get(p) &&
+      staged.getParent == Paths.get(p).getParent &&
+      staged.getFileName.toString.startsWith("."),
+      s"staging path $stagedPath is not a hidden sibling of $p")
     assert(Files.readString(Paths.get(p, "payload")) == "good")
     // invalidate, then fail the rebuild: the old artifact must survive
     Files.setLastModifiedTime(src.resolve("part-0.parquet"),
@@ -44,6 +50,42 @@ class ServingCacheSpec extends SparkSpecBase {
     }
     assert(Files.readString(Paths.get(p, "payload")) == "good",
       "failed rebuild clobbered the previous artifact")
+  }
+
+  test("Swap: a throwing stage leaves the target byte-identical, no hidden sibling, and rethrows the original") {
+    val base = Files.createTempDirectory("graft-swap-throw")
+    val dir = base.resolve("art")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("payload"), "good")
+    val file = base.resolve("LATEST")
+    Files.writeString(file, "v1")
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val s = Files.walk(base)
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => base.relativize(f).toString -> Files.readAllBytes(f).toSeq)
+        .toMap
+      finally s.close()
+    }
+    val before = snapshot()
+    val boom = new IllegalStateException("stage exploded")
+    val dirThrown = intercept[IllegalStateException] {
+      Swap.replaceDir(dir) { staging =>
+        Files.createDirectories(staging)
+        Files.writeString(staging.resolve("payload"), "half")
+        throw boom
+      }
+    }
+    val fileThrown = intercept[IllegalStateException] {
+      Swap.replaceFile(file) { staging =>
+        Files.writeString(staging, "v2")
+        throw boom
+      }
+    }
+    assert((dirThrown eq boom) && (fileThrown eq boom),
+      "the stage's own exception, not a wrapper")
+    // every file under base — the targets' bytes and the absence of any
+    // staging or old sibling — is exactly as before
+    assert(snapshot() == before)
   }
 
   test("buildOnce builds once, then rebuilds only when sources get newer") {
